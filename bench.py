@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 os.environ.setdefault("REFINED_SPARK_TMPFS_SHUFFLE", "1")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 BENCH_FIXTURE_DIR = os.environ.get(
     "REFINED_SPARK_BENCH_DATA", "/tmp/refined_spark_bench_corpus"
 )
@@ -274,9 +274,7 @@ def prep_stage_inputs(corpus: str) -> str:
                              (mention_id and qcode suffixed per shard: an
                              exact stand-in for a CC_AMPLIFY x bigger corpus
                              — same structure, independent shards), written
-                             partitionBy(shard) so the sharded clustering
-                             driver's per-shard filters become partition
-                             PRUNING (s jobs, one corpus-total scan)."""
+                             partitionBy(shard)."""
     from pyspark.sql import functions as F
 
     from refined_spark.operators import coref, pem, scoring, spans
@@ -406,18 +404,13 @@ def stage_run(corpus: str, prep: str, stage: str, cores: int,
       scoring           — context embedding (Arrow UDF) + candidate scoring
                           (prior + jw + cosine) + argmax resolution, over
                           the materialized post-coref candidates
-      clustering        — the engine's clustering driver for a
-                          shard-partitioned corpus
-                          (clustering.cluster_assignments_sharded): shards
-                          round-robined into a few GROUPS, one concurrent
-                          CC job per group, so per-round driver barriers
-                          of one job overlap the compute of the others
-                          without the one-plan-per-shard driver storm that
-                          made 16 concurrent jobs DRIVER-bound at 16 cores
-      clustering_global — ONE global CC over the same edges (the round-3
-                          gate shape, kept for transparency: it measures
-                          the algorithm WITH its driver-loop serial
-                          fraction exposed)
+      clustering        — the engine's clustering stage
+                          (clustering.cluster_assignments: one group-by on
+                          the winner entity, joined back) over the
+                          shard-amplified resolved mentions
+      clustering_global — the same plan with the shard column pruned at
+                          the scan (kept so the scaling JSON and BENCH.md
+                          keep their rows)
       e2e               — the full pipeline (context number, 3 measured
                           runs)
     """
@@ -467,14 +460,9 @@ def stage_run(corpus: str, prep: str, stage: str, cores: int,
     elif stage == "clustering":
         resolved = spark.read.parquet(f"{prep}/resolved_amp.parquet")
         n_items = resolved.count()  # mentions/sec
-        shards = list(range(CC_AMPLIFY))  # known a priori — no distinct job
 
         def body():
-            materialize(
-                clustering.cluster_assignments_sharded(
-                    resolved, shard_col="shard", shards=shards,
-                )
-            )
+            materialize(clustering.cluster_assignments(resolved.drop("shard")))
 
     elif stage == "clustering_global":
         resolved = spark.read.parquet(
@@ -609,8 +597,8 @@ def main_scaling() -> None:
     WIDE_PAIR = (8, 32)
     arm_runs = max(int(os.environ.get("REFINED_SPARK_SCALING_RUNS", "3")), 2)
     plan: list[tuple[str, int, int]] = []
-    # gate stages first (scoring + the sharded clustering driver), then e2e
-    # at the same pair, then the global-CC transparency rows; the 8 -> 32
+    # gate stages first (scoring + clustering), then e2e at the same pair,
+    # then the global clustering context rows; the 8 -> 32
     # wide pair (round-3 diagnosis material) re-runs only on request
     for stage in ("scoring", "clustering"):
         for cores in GATE_PAIR:
@@ -1069,21 +1057,14 @@ def _write_bench_md(results, eff, row, eff_str, GATE_PAIR, WIDE_PAIR) -> None:
         f" e2e at the same pair = {eff_str('e2e', GATE_PAIR)} (context; the"
         " north rule gates the two stages).",
         "",
-        "The clustering stage is the engine's sharded driver",
-        "(clustering.cluster_assignments_sharded) at its round-5 default",
-        "max_parallel=1: ONE CC job over the shard union. Rounds 2-4 ran",
-        "3 concurrent grouped jobs to overlap per-round driver barriers —",
-        "measured on THIS round's storm-gated samples, that concurrency is",
-        "counterproductive on one box (0.642 efficiency, 1.47x CPU: the",
-        "concurrent stages thrash each other's cache and shuffle working",
-        "sets) while the single job scales at ~1.0 with CPU parity,",
-        "because the round-4 barrier cuts (proven_rounds, check_every,",
-        "lazy persist) already shrank the driver serial fraction the",
-        "concurrency existed to hide. The knob stays for deployments",
-        "where overlap genuinely wins; the global single-job row below is",
-        "the same plan without the shard bookkeeping.",
+        "The clustering stage is clustering.cluster_assignments over the",
+        "shard union: one group-by on the winner entity, joined back to",
+        "the mentions, with no iterative connected-components job (each",
+        "mention has one winner, so the components are the entity groups).",
+        "The global row below is the same plan with the shard column",
+        "pruned at the scan.",
         "",
-        "## Context rows (global single-job CC; 8 -> 32 where measured)",
+        "## Context rows (global clustering; 8 -> 32 where measured)",
         "",
         "| stage | input items | N cores | N s | N thr | N busy-cpu-s |"
         " N sys-cpu-s | 4N cores | 4N s | 4N thr | 4N busy-cpu-s |"

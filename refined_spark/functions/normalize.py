@@ -11,11 +11,13 @@ One shared pure-Python kernel (`normalize_surface_py`) is used by
 so blocking keys are bit-identical on both sides of the parity comparison
 (this decides the pairwise-F1 >= 0.99 gate; see SURVEY.md §7.4.2).
 
-`normalize_surface_col` is a builtin-only (JVM / whole-stage-codegen)
-column expression with identical semantics for ASCII inputs plus a
-`translate`-based fold of the common Latin-1 accents; the engine uses the
-builtin path by default (no Python in the hot path) and tests assert the
-two paths agree on the fixture vocabulary.
+The pipeline runs the UDF (`plans.pipeline.build_mentions`) for mentions
+and labels alike. `normalize_surface_col` is a builtin-only (JVM /
+whole-stage-codegen) twin for SQL-expressible driver queries, and tests
+assert the two agree on the fixture vocabulary. They agree on ASCII and on
+the explicit fold tables; they differ on other non-ASCII characters: the
+Python kernel NFKD-folds them and drops what stays non-ASCII ("ĉ" -> "c",
+"東京" -> ""), while the builtin column keeps them as they are.
 """
 
 from __future__ import annotations

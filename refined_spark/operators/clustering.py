@@ -1,6 +1,12 @@
-"""Distributed connected components: large-star / small-star.
+"""Clustering: winner-entity clusters and distributed connected components.
 
-The transitive-clustering stage of the north rule. Implements the
+`cluster_assignments` is the transitive-clustering stage of the north
+rule. Every resolved mention has at most one winner entity, so the
+mention<->entity graph is a forest of stars and its components are the
+qcode groups: one hash aggregation gives them, no iterative job.
+
+`connected_components` serves graphs whose shape is not known in advance —
+the near-dup evidence edges of dedup.near_dup_clusters. It implements the
 alternating large-star/small-star algorithm (Kiveris et al., "Connected
 Components in MapReduce and Beyond", SoCC'14) on plain DataFrames:
 
@@ -39,15 +45,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    return (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -125,9 +122,7 @@ def _violation_count(after: DataFrame) -> int:
 def connected_components(
     edges: DataFrame,
     max_rounds: int = 30,
-    edges_unique: bool = False,
     check_every: int = 2,
-    proven_rounds: int | None = None,
 ) -> DataFrame:
     """edges(src long, dst long) -> (node long, component long) where
     component is the minimum node id of the component. Isolated nodes do not
@@ -140,12 +135,10 @@ def connected_components(
     lazily (eager=False): it materializes inside round 1's job instead of as
     a separate serial driver barrier.
 
-    edges_unique=True skips the initial dedup shuffle — the stars tolerate
-    duplicate edges, but deduping up front keeps per-round volume minimal,
-    so only skip it when the caller guarantees uniqueness (e.g. one edge
-    per resolved mention). Orienting (greatest, least) first makes a
-    separate symmetrize pass unnecessary: the undirected edge set is fully
-    described by its canonical orientation.
+    The input is deduped up front (the stars tolerate duplicate edges, but
+    deduping keeps per-round volume minimal). Orienting (greatest, least)
+    first makes a separate symmetrize pass unnecessary: the undirected edge
+    set is fully described by its canonical orientation.
 
     On convergence the result is assembled WITHOUT a global aggregation:
     the forest rows are already one-per-child, and roots (parents) never
@@ -162,41 +155,12 @@ def connected_components(
     rounds re-emit the forest unchanged (two cheap shuffles), while every
     skipped check saves a full forest-test aggregation.
 
-    proven_rounds=k skips the convergence test entirely and runs EXACTLY k
-    large∘small rounds: for edge sets whose shape guarantees the round
-    count (e.g. bipartite stars — every edge joins a leaf to its hub, no
-    two leaves share an edge — collapse to the depth-1 forest in ONE
-    round: large-star links every larger-than-hub node to the hub's
-    minimum and small-star re-roots the rest), the forest test is a
-    theorem check, and skipping it saves one full pass over the edge set
-    (a union + groupBy + count action) PER CALL — a real bill at 100 TB
-    and a driver barrier at any scale. The PROOF obligation is the
-    caller's: an edge set that needs more than k rounds returns a
-    deeper-than-1 forest silently, so only pass proven_rounds for shapes
-    constructed by the caller itself, never for caller-supplied graphs
-    (cluster_assignments qualifies: it builds the star edges two lines
-    above the call).
-
     Raises RuntimeError if max_rounds is exhausted before convergence
     (returning the unconverged state could silently split components)."""
     cur = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     ).where(F.col("src") != F.col("dst"))
-    if not edges_unique:
-        cur = cur.distinct()
-    cur = cur.localCheckpoint(eager=False)
-    if proven_rounds is not None:
-        for _ in range(proven_rounds):
-            cur = _small_star(_large_star(cur))
-        # no checkpoint needed: the fixed round count bounds lineage depth
-        comp = cur.select(
-            F.col("src").alias("node"), F.col("dst").alias("component")
-        )
-        roots = (
-            cur.select("dst").distinct()
-            .select(F.col("dst").alias("node"), F.col("dst").alias("component"))
-        )
-        return comp.unionByName(roots)
+    cur = cur.distinct().localCheckpoint(eager=False)
     converged = False
     rounds_done = 0
     while rounds_done < max_rounds:
@@ -226,126 +190,36 @@ def connected_components(
     return comp.unionByName(roots)
 
 
-def cluster_assignments_sharded(
-    resolved: DataFrame,
-    shard_col: str = "shard",
-    max_parallel: int = 1,
-    shards: list | None = None,
-) -> DataFrame:
-    """cluster_assignments over a corpus whose edge space is PARTITIONED by
-    a shard key — clusters never cross shards BY CONTRACT (the caller
-    guarantees it: e.g. per-tenant corpora, per-snapshot increments, or
-    mention/entity ids suffixed with the shard). Runs one independent CC
-    job per shard CONCURRENTLY from a thread pool and unions the results.
-
-    Why this exists (scale): the CC driver loop is the pipeline's only
-    serial fraction — per-round job-submission barriers and the
-    convergence test cost the same at N and 4N executors, so they cap
-    N -> 4N scaling (Amdahl). With s independent shards the loops overlap:
-    while shard A sits in a barrier the executors run shard B's stages,
-    and the non-scaling fraction drops ~1/s. This is exactly how a 100 TB
-    run should be driven when the edge space is naturally partitioned
-    (per-source, per-snapshot): concurrent Spark jobs from one driver are
-    the documented Spark idiom for overlapping independent work
-    (job scheduling docs; scheduler handles the interleave).
-
-    `shards`: pass the shard values when the caller knows them (a 100 TB
-    driver reads them from the table's partition metadata — no job);
-    otherwise ONE small distinct-collect derives them (acceptable at bench
-    scale, disclosed here).
-
-    `concurrency` bounds the number of CONCURRENT JOBS, not the number of
-    shards: shards are round-robined into that many GROUPS and each job
-    runs ONE CC over its group's union. Because node ids are disjoint
-    across shards (the caller's contract), a union of shards has exactly
-    the per-shard components — same answer, s/concurrency times fewer
-    plans. This matters because each job costs REAL driver CPU (Catalyst
-    analysis of the CC plan, py4j round-trips, job scheduling) serialized
-    by the Python GIL: one job per shard makes the driver the bottleneck
-    exactly on wide executor pools (measured: 16 single-shard jobs at 16
-    cores ran 1.8x SLOWER than one global job; 2-4 grouped jobs keep the
-    barrier overlap without the driver storm).
-
-    Default 1 (round-5 revision, measured): with the round-4 barrier cuts
-    (proven_rounds, lazy persist, check_every) the CC driver's serial
-    fraction is small enough that ONE job over the shard union scales at
-    0.96 efficiency 4 -> 16 cores with CPU parity (BENCH.md: 79.0 s ->
-    20.6 s, 308 vs 302 busy-CPU-s), while 3 concurrent jobs measured
-    0.642 with 1.47x CPU — the concurrent stages thrash each other's
-    cache/shuffle working sets on one box. Round 2-4 measured the
-    opposite on storm-contaminated samples (the round-5 root-cause
-    section); concurrency remains available for deployments where the
-    barrier overlap genuinely wins — measure, then set it.
-
-    Each group's frame filters shard_col isin(group): over a
-    shard-partitioned source (partitionBy(shard) parquet/Iceberg) Catalyst
-    turns that into partition PRUNING, so the jobs do one corpus-total
-    scan, not s of them."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if shards is None:
-        shards = [
-            r[0] for r in resolved.select(shard_col).distinct().collect()
-        ]
-    if not shards:
-        return cluster_assignments(resolved.drop(shard_col))
-
-    concurrency = max(1, min(max_parallel, len(shards)))
-    groups = [list(shards[i::concurrency]) for i in range(concurrency)]
-
-    def one(group):
-        if len(group) == 1:
-            part = resolved.where(F.col(shard_col) == F.lit(group[0]))
-        else:
-            part = resolved.where(F.col(shard_col).isin(group))
-        return cluster_assignments(part.drop(shard_col))
-
-    with ThreadPoolExecutor(max_workers=concurrency) as ex:
-        parts = list(ex.map(one, groups))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def cluster_assignments(resolved: DataFrame) -> DataFrame:
     """North-rule stage 6: mentions sharing a resolved entity become one
-    cluster. Builds star edges mention<->entity-anchor in id space, runs CC,
-    and returns (mention_id, cluster_id). NIL mentions become singletons.
+    cluster. Returns (mention_id, cluster_id); a NIL mention is a singleton
+    with cluster_id = xxhash64(mention_id).
 
-    Note: with winner-entity edges only, CC is equivalent to groupBy(qcode)
-    — we still run the general CC job because edges from near-dup /
-    similarity evidence (dedup.py) can be unioned in, and because the judge
-    grades the scalable clustering path.
-
-    proven_rounds=1: the edges built two lines below are BIPARTITE STARS
-    by construction (every edge connects a unique mention node to its
-    entity anchor; mention nodes never share an edge — extract_mentions
-    guarantees mention_id uniqueness), and one large-star∘small-star
-    round maps every node of such a component to the component minimum —
-    large-star links all larger-than-center nodes to the center's minimum
-    and small-star collapses the rest. The per-round convergence test is
-    therefore a theorem check here, and skipping it (see
-    connected_components) saves a full pass over the edge set — one
-    union + groupBy + count action and its driver barrier — per pipeline
-    run at every corpus size. The proof obligation stays INSIDE this
-    function: the edge set never comes from the caller, so no caller can
-    invalidate the star shape. Evidence edges from dedup/similarity are
-    unioned at the component level downstream (or run through the tested
-    general loop), never into this star job."""
+    The ids are those of connected components over the mention<->entity
+    star edges (xxhash64(mention_id) -- xxhash64("ENT:", qcode)): each star
+    is one component labelled with its minimum node id, so
+    cluster_id = least(min xxhash64(mention_id), xxhash64("ENT:", qcode))
+    per qcode. A groupBy computes that with partial aggregation, so a hot
+    entity costs one row per map task before the shuffle (a window over
+    qcode would put all its mentions in one task). The per-entity side of
+    the join back is one row per entity: broadcast where it fits, and
+    AQE's skew-join split covers a hot qcode where it does not. NIL
+    mentions skip the aggregation and the join: as null join keys they
+    would all hash to one shuffle partition."""
     m = resolved.select(
         "mention_id", "qcode", F.xxhash64("mention_id").alias("mid")
     )
-    anchors = m.where(F.col("qcode").isNotNull()).select(
-        "mention_id", "mid", F.xxhash64(F.lit("ENT:"), "qcode").alias("eid")
+    hit = m.where(F.col("qcode").isNotNull())
+    per_entity = hit.groupBy("qcode").agg(
+        F.least(
+            F.min("mid"), F.xxhash64(F.lit("ENT:"), F.col("qcode"))
+        ).alias("cluster_id")
     )
-    edges = anchors.select(F.col("mid").alias("src"), F.col("eid").alias("dst"))
-    comp = connected_components(edges, edges_unique=True, proven_rounds=1)
-    assigned = (
-        m.join(comp, m["mid"] == comp["node"], "left")
-        .select(
-            "mention_id",
-            F.coalesce(F.col("component"), F.col("mid")).alias("cluster_id"),
-        )
+    nil = m.where(F.col("qcode").isNull()).select(
+        "mention_id", F.col("mid").alias("cluster_id")
     )
-    return assigned
+    return (
+        hit.join(per_entity, "qcode")
+        .select("mention_id", "cluster_id")
+        .unionByName(nil)
+    )

@@ -6,7 +6,7 @@ documents ─ 0 validate (span invariant)
           ─ 3 coref         person-name propagation (J4)
           ─ 4 scored        prior + JW + cosine (C2/C4)
           ─ 5 resolved      argmax + threshold (C5/P7)
-          ─ 6 clusters      CC over winner edges
+          ─ 6 clusters      group-by on the winner entity
           ─ 7 eval          pairwise F1 vs gold pairs
 
 Every numbered stage commits a snapshot via StageStore (resume-safe); the
@@ -198,13 +198,13 @@ def run(
         scored = stage("scored", make_scored)
         resolved = stage("resolved", lambda: scoring.resolve(scored))
     if store is None:
-        # resolved feeds both the CC job and the final join — cache it so
-        # the upstream computes once. A LAZY persist (not the old eager
-        # localCheckpoint): the cache fills inside the CC round's first job
-        # instead of as a separate full-pipeline driver barrier, and the
-        # final join reads the filled cache. persist (vs localCheckpoint)
-        # keeps lineage, which local mode never needs truncated here — the
-        # CC rounds do their own checkpointing where lineage actually grows.
+        # resolved feeds both the clustering aggregation and the final
+        # join — cache it so the upstream computes once. A LAZY persist (not
+        # an eager localCheckpoint): the cache fills inside the first job
+        # that reads it instead of as a separate full-pipeline driver
+        # barrier, and later reads hit the filled cache. persist (vs
+        # localCheckpoint) keeps lineage, which local mode never needs
+        # truncated here.
         resolved = resolved.persist()
         _PERSISTED.append(resolved)
     clusters = stage("clusters", lambda: clustering.cluster_assignments(resolved))

@@ -19,6 +19,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of MemAvailable, capped at 48g and floored at 1g. In local mode
+    the driver heap holds every executor, and a fixed 48g let the JVM grow
+    past the RAM of a smaller host until the kernel killed it."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    mb = int(line.split()[1]) // 1024
+                    return f"{max(1024, min(48 * 1024, mb // 2))}m"
+    except OSError:
+        pass
+    return "48g"
+
+
 def get_spark(
     app_name: str = "refined_spark",
     master: str | None = None,
@@ -111,7 +126,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Scan-split floor. Split size is max(openCostInBytes,

@@ -2,7 +2,10 @@
 
 import pyspark.sql.functions as F
 
-from refined_spark.operators.clustering import connected_components
+from refined_spark.operators.clustering import (
+    cluster_assignments,
+    connected_components,
+)
 
 
 def _components(spark, edges, check_every=2):
@@ -65,83 +68,50 @@ def test_check_every_batching_is_invariant(spark):
     assert _components(spark, edges, check_every=3) == expected
 
 
-def test_proven_rounds_star_matches_tested_loop(spark):
-    """proven_rounds=1 on bipartite stars (the cluster_assignments shape)
-    returns exactly what the convergence-tested loop returns — the skipped
-    forest test was a theorem check. Mixed component sizes, including a
-    singleton edge and a large hub, exercise both star roles."""
-    edges = [(100, i) for i in range(1, 9)] + [(200, 150)] + [(300, i) for i in (50, 60)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    tested = {(r.node, r.component)
-              for r in connected_components(df, check_every=1).collect()}
-    proven = {(r.node, r.component)
-              for r in connected_components(df, proven_rounds=1).collect()}
-    assert proven == tested
-
-
-def test_proven_rounds_contract_is_caller_owned(spark):
-    """The flip side of the contract: proven_rounds too small for the shape
-    returns a NON-forest silently (here: a path needs >1 round). This
-    documents why proven_rounds must only be passed for internally
-    constructed shapes — the tested loop is the default for a reason."""
-    edges = [(i, i + 1) for i in range(8)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    rows = connected_components(df, proven_rounds=1).collect()
-    comp = {}
-    for r in rows:
-        comp.setdefault(r.component, set()).add(r.node)
-    # one true component, but the premature stop leaves it split
-    assert len(comp) > 1
-
-
 def test_component_label_is_min_id(spark):
     df = spark.createDataFrame([(5, 9), (9, 3)], "src long, dst long")
     rows = connected_components(df).collect()
     assert {r.component for r in rows} == {3}
 
 
-def test_cluster_assignments_sharded_matches_global(spark):
-    """The concurrent per-shard CC driver is result-identical to one global
-    CC over the union, when the edge space is shard-disjoint by
-    construction (ids suffixed per shard — the bench amplification shape
-    and the per-tenant/per-snapshot 100 TB shape)."""
-    from pyspark.sql import functions as F
+def test_cluster_assignments_matches_star_connected_components(spark):
+    """The group-by clusters equal the tested CC loop run over the
+    mention<->entity star edges. The input has NIL mentions, a singleton
+    entity, a large hub, and ids suffixed per shard."""
+    base = [("m1", "Q1"), ("m2", "Q1"), ("m3", "Q2"), ("m4", None),
+            ("m5", "Q2"), ("m6", "Q3"), ("m7", None)]
+    base += [(f"h{i}", "QH") for i in range(40)]
+    rows = [(f"{m}#{s}", f"{q}#{s}" if q else None)
+            for s in range(3) for m, q in base]
+    resolved = spark.createDataFrame(rows, "mention_id string, qcode string")
 
-    from refined_spark.operators.clustering import (
-        cluster_assignments,
-        cluster_assignments_sharded,
+    m = resolved.select("mention_id", "qcode",
+                        F.xxhash64("mention_id").alias("mid"))
+    edges = m.where(F.col("qcode").isNotNull()).select(
+        F.col("mid").alias("src"),
+        F.xxhash64(F.lit("ENT:"), "qcode").alias("dst"),
     )
-
-    base = [
-        ("m1", "Q1"), ("m2", "Q1"), ("m3", "Q2"), ("m4", None), ("m5", "Q2"),
-    ]
-    rows = [
-        (f"{m}#{s}", f"{q}#{s}" if q else None, s)
-        for s in range(4)
-        for m, q in base
-    ]
-    resolved = spark.createDataFrame(
-        rows, "mention_id string, qcode string, shard int"
-    )
-    got = {
-        r.mention_id: r.cluster_id
-        for r in cluster_assignments_sharded(
-            resolved, shard_col="shard", max_parallel=4
-        ).collect()
-    }
+    comp = connected_components(edges)
     want = {
         r.mention_id: r.cluster_id
-        for r in cluster_assignments(resolved.drop("shard")).collect()
-    }
-    assert got == want
-    # same-entity mentions co-cluster within a shard, never across shards
-    assert got["m1#0"] == got["m2#0"]
-    assert got["m1#0"] != got["m1#1"]
-    # explicit shard list (the no-distinct-job path) gives the same answer
-    got2 = {
-        r.mention_id: r.cluster_id
-        for r in cluster_assignments_sharded(
-            resolved, shard_col="shard", shards=[0, 1, 2, 3]
+        for r in m.join(comp, m["mid"] == comp["node"], "left").select(
+            "mention_id",
+            F.coalesce("component", "mid").alias("cluster_id"),
         ).collect()
     }
-    assert got2 == got
+    out = cluster_assignments(resolved).collect()
+    assert len(out) == len(rows)
+    got = {r.mention_id: r.cluster_id for r in out}
+    assert got == want
+    # same-entity mentions co-cluster within a shard, never across shards
+    for s in range(3):
+        assert got[f"m1#{s}"] == got[f"m2#{s}"]
+        assert got[f"m3#{s}"] == got[f"m5#{s}"]
+        assert len({got[f"h{i}#{s}"] for i in range(40)}) == 1
+        assert got[f"m4#{s}"] != got[f"m7#{s}"]
+    shards_of = {}
+    for mention, cid in got.items():
+        shards_of.setdefault(cid, set()).add(mention.split("#")[1])
+    assert all(len(v) == 1 for v in shards_of.values())
+    # 4 entities and 2 NIL singletons per shard
+    assert len(shards_of) == 3 * 6
