@@ -39,7 +39,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from refined_spark.functions.hashing import char_shingles_col
+    from refined_spark.functions.hashing import banded_rows, char_shingles_col
     from refined_spark.functions.joins import maybe_broadcast
     from refined_spark.operators import blocking, pem
     from refined_spark.plans import pipeline
@@ -69,11 +69,11 @@ def main() -> None:
     flat = pem.pem_flat(pem_df)
     missed = exact.where(F.col("qcode").isNull()).select(*mentions.columns)
     surfaces = flat.select("surface_form").distinct()
-    s_banded = blocking._banded(surfaces, "surface_form", k, num_hashes, bands)
+    s_banded = banded_rows(surfaces, "surface_form", k, num_hashes, bands)
     # round-6 plan shape: banding + verify run per DISTINCT block key
     # (functions of the key alone), then rejoin the mention set
     keys = missed.select("block_key").distinct().repartition(32)
-    k_banded = blocking._banded(keys, "block_key", k, num_hashes, bands)
+    k_banded = banded_rows(keys, "block_key", k, num_hashes, bands)
     key_pairs = (k_banded.join(maybe_broadcast(s_banded),
                                ["band_id", "band_hash"])
                  .select("block_key", "surface_form").distinct())

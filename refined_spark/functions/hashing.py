@@ -168,7 +168,7 @@ def band_hashes_col(sig: Column, bands: int, num_hashes: int) -> Column:
     """LSH banding: the signature array sliced into `bands` groups of
     num_hashes//bands rows, each group hashed to one band key string.
     Shared by the dedup channel (dedup.lsh_candidate_pairs) and the
-    blocking channel (blocking._banded) so the band-key definition can
+    blocking channel (banded_rows) so the band-key definition can
     never drift between them."""
     from pyspark.sql import functions as F
 
@@ -179,3 +179,22 @@ def band_hashes_col(sig: Column, bands: int, num_hashes: int) -> Column:
             F.array_join(F.slice(sig, b * rows_per_band + 1, rows_per_band), ",")
         ),
     )
+
+
+def banded_rows(df, text_col: str, k: int, num_hashes: int, bands: int):
+    """+ (band_id, band_hash) per input row, one row per band, from a
+    MinHash signature of the char-k-shingles of ``text_col``. The blocking
+    channel bands both sides with it: the mention keys per run and the
+    dictionary surfaces once per dictionary (pem.banded_surfaces)."""
+    base = df.withColumn(
+        "_mh_base", minhash_base_col(char_shingles_col(F.col(text_col), k))
+    )
+    sig = base.withColumn(
+        "_sig", minhash_sig_from_base_col(F.col("_mh_base"), num_hashes)
+    ).drop("_mh_base")
+    return sig.select(
+        "*",
+        F.posexplode(
+            band_hashes_col(F.col("_sig"), bands, num_hashes)
+        ).alias("band_id", "band_hash"),
+    ).drop("_sig")

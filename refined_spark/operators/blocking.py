@@ -12,8 +12,9 @@ dictionary's candidates are attached.
 
 Scale shape (the whole point — no pairwise comparison ever happens
 outside a shared band):
-  - dictionary side: |surfaces| x bands rows, computed once per dictionary
-    refresh and reusable across corpus runs (like pem.attach_jw);
+  - dictionary side: |surfaces| x bands rows, a part of the dictionary
+    index (pem.banded_surfaces): built once per dictionary and shared by
+    every run over it, like the flat dictionary's string features;
   - mention side: bands explode only mentions that MISSED the exact join
     (typically a small fraction);
   - the band equi-join is a plain shuffle/broadcast join; hot bands (very
@@ -29,11 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from refined_spark.functions.hashing import (
-    char_shingles_col,
-    minhash_base_col,
-    minhash_sig_from_base_col,
-)
+from refined_spark.functions.hashing import banded_rows, char_shingles_col
 
 # persisted intermediates of the two-channel fallback join, released via
 # release_cache() — same contract as coref/pipeline (the storeless analog
@@ -50,25 +47,6 @@ def release_cache() -> None:
     candidates frame is materialized downstream."""
     while _PERSISTED:
         _PERSISTED.pop().unpersist()
-
-
-def _banded(df: DataFrame, text_col: str, k: int, num_hashes: int, bands: int) -> DataFrame:
-    """+ (band_id, band_hash) per input row, one row per band. Band-key
-    definition shared with the dedup channel via hashing.band_hashes_col."""
-    from refined_spark.functions.hashing import band_hashes_col
-
-    base = df.withColumn(
-        "_mh_base", minhash_base_col(char_shingles_col(F.col(text_col), k))
-    )
-    sig = base.withColumn(
-        "_sig", minhash_sig_from_base_col(F.col("_mh_base"), num_hashes)
-    ).drop("_mh_base")
-    return sig.select(
-        "*",
-        F.posexplode(
-            band_hashes_col(F.col("_sig"), bands, num_hashes)
-        ).alias("band_id", "band_hash"),
-    ).drop("_sig")
 
 
 def lsh_candidate_join(
@@ -96,8 +74,8 @@ def lsh_candidate_join(
     max-prior surface wins (tie: max Jaccard, then surface string).
 
     The jw feature is recomputed against the MENTION's block_key, not
-    inherited from the dictionary: attach_jw scores
-    jaro_winkler(surface_form, label), and for a fuzzy match
+    inherited from the dictionary: the indexed dictionary (pem.dictionary)
+    scores jaro_winkler(surface_form, label), and for a fuzzy match
     block_key != surface_form — a typo'd mention must not inherit the clean
     surface's near-perfect jw (it would inflate its score and NIL
     decisions; the oracle defines jw on the block_key). The surviving LSH
@@ -106,15 +84,14 @@ def lsh_candidate_join(
     No broadcast hints: banded surfaces are |surfaces| x bands rows and the
     flat dictionary is dictionary-scale — AQE decides (functions/joins.py)."""
     from refined_spark.functions.joins import maybe_broadcast
-    from refined_spark.operators.pem import attach_jw, pem_flat
+    from refined_spark.operators import pem as pem_ops
 
-    flat = pem_flat(pem)
-    if entity_meta is not None:
-        flat = attach_jw(flat, entity_meta)
+    flat = pem_ops.dictionary(pem, entity_meta).select(
+        "surface_form", "qcode", "prior", "rank"
+    )
+    s_banded = pem_ops.banded_surfaces(pem, k, num_hashes, bands)
 
     mention_cols = list(mentions.columns)
-    surfaces = flat.select("surface_form").distinct()
-    s_banded = _banded(surfaces, "surface_form", k, num_hashes, bands)
     # banding and the Jaccard verify are functions of the BLOCK KEY alone,
     # so they run once per distinct key, not once per mention: mentions
     # sharing a key (common on real corpora and ~2x on the bench tail)
@@ -131,7 +108,7 @@ def lsh_candidate_join(
         mentions.select("block_key").distinct()
         .repartition(mentions.sparkSession.sparkContext.defaultParallelism)
     )
-    k_banded = _banded(keys, "block_key", k, num_hashes, bands)
+    k_banded = banded_rows(keys, "block_key", k, num_hashes, bands)
 
     key_pairs = (
         k_banded.join(maybe_broadcast(s_banded), ["band_id", "band_hash"])
@@ -150,9 +127,7 @@ def lsh_candidate_join(
     verified = mentions.join(verified_keys, "block_key")
 
     cand = verified.join(maybe_broadcast(flat), "surface_form")
-    feat = [c for c in ("jw", "lev") if c in flat.columns]
-    has_jw = bool(feat)
-    extra = ["prior", "rank"] + feat
+    extra = ["prior", "rank"]
     best = F.max_by(
         F.struct(*[F.col(c) for c in extra]),
         F.struct(F.col("prior"), F.col("_jac"), F.col("surface_form")),
@@ -164,23 +139,11 @@ def lsh_candidate_join(
             *mention_cols, "qcode", *[F.col(f"_b.{c}").alias(c) for c in extra]
         )
     )
-    if not has_jw or entity_meta is None:
+    if entity_meta is None:
         return deduped
-    from refined_spark.functions.normalize import normalize_surface_udf
-    from refined_spark.functions.similarity import jaro_winkler_udf, lev_sim_col
-
-    meta = entity_meta.select(
-        "qcode", normalize_surface_udf(F.col("label")).alias("norm_label")
+    return pem_ops.string_features(deduped, "block_key", entity_meta).select(
+        *mention_cols, "qcode", *extra, "jw", "lev"
     )
-    lbl = F.coalesce(F.col("norm_label"), F.lit(""))
-    feat_exprs = {
-        "jw": jaro_winkler_udf(F.col("block_key"), lbl),
-        "lev": lev_sim_col(F.col("block_key"), lbl),
-    }
-    out = deduped.drop(*feat).join(maybe_broadcast(meta), "qcode", "left")
-    for c in feat:
-        out = out.withColumn(c, feat_exprs[c])
-    return out.drop("norm_label").select(*mention_cols, "qcode", *extra)
 
 
 def candidate_join_with_lsh_fallback(

@@ -58,10 +58,10 @@ def propagate_person_coref(
     the pre-fanout mention table — the receiver set comes from it directly
     instead of a distinct() over the (10x larger) candidate fanout.
 
-    When candidates carry a precomputed `jw` column (attach_jw on the
-    dictionary), donated rows get theirs computed here against
-    `entity_meta` — the donated pair set is tiny, so this is the only place
-    the string kernel runs per-corpus."""
+    When candidates carry a precomputed `jw` column (pem.dictionary's
+    string features), donated rows get theirs computed here against
+    `entity_meta`'s indexed labels — the donated pair set is tiny, so this
+    is the only place the string kernel runs per-corpus."""
     feat = [c for c in ("jw", "lev") if c in candidates.columns]
     has_jw = bool(feat)
     cols = ["doc_id", "mention_id", "block_key", "offset", "qcode", "prior"] + feat
@@ -114,22 +114,10 @@ def propagate_person_coref(
         if entity_meta is None:
             raise ValueError("candidates carry jw — entity_meta required "
                              "to score donated rows")
-        from refined_spark.functions.normalize import normalize_surface_udf
-        from refined_spark.functions.similarity import jaro_winkler_udf, lev_sim_col
+        from refined_spark.operators.pem import string_features
 
-        # same normalization kernel as mentions/oracle (SURVEY §7.4.2)
-        meta = entity_meta.select(
-            "qcode", normalize_surface_udf(F.col("label")).alias("norm_label")
-        )
-        lbl = F.coalesce(F.col("norm_label"), F.lit(""))
-        feat_exprs = {
-            "jw": jaro_winkler_udf(F.col("block_key"), lbl).alias("jw"),
-            "lev": lev_sim_col(F.col("block_key"), lbl).alias("lev"),
-        }
-        donated = donated.join(maybe_broadcast(meta), "qcode", "left").select(
-            *[c for c in cols if c not in feat],
-            *[feat_exprs[c] for c in feat],
-        )
+        # same normalized labels as the dictionary's features (pem index)
+        donated = string_features(donated, "block_key", entity_meta).select(*cols)
     # donated is referenced three times below (mention-id set, union);
     # cache so its subtree (donor agg + receiver join) runs once — it is
     # tiny relative to the candidate fanout (only mentions that actually

@@ -42,12 +42,8 @@ from pyspark.sql.types import ArrayType, DoubleType
 from refined_spark.config import ED_THRESHOLD, W_COS, W_JW, W_LEV, W_PRIOR
 from refined_spark.fixtures import hash_embed_batch
 from refined_spark.functions.joins import maybe_broadcast
-from refined_spark.functions.normalize import normalize_surface_udf
-from refined_spark.functions.similarity import (
-    cosine_seq_udf,
-    jaro_winkler_udf,
-    lev_sim_col,
-)
+from refined_spark.functions.similarity import cosine_seq_udf
+from refined_spark.operators import pem
 
 
 @pandas_udf(ArrayType(DoubleType()))
@@ -224,7 +220,7 @@ def score_candidates(
     and resolve to NIL downstream.
 
     When candidates already carry jw (precomputed on the dictionary by
-    pem.attach_jw — the at-scale path), no string-kernel pass runs here.
+    pem.dictionary — the at-scale path), no string-kernel pass runs here.
     Otherwise jw is computed once per DISTINCT (block_key, qcode) pair and
     hash-joined back (orders of magnitude fewer Python-UDF rows than
     per-candidate).
@@ -249,21 +245,13 @@ def score_candidates(
             ctx_emb, ctx_key, "left"
         )
     else:
-        meta = entity_meta.select(
-            "qcode", normalize_surface_udf(F.col("label")).alias("norm_label")
-        )
-        lbl = F.coalesce(F.col("norm_label"), F.lit(""))
-        jw_tbl = (
+        pairs = (
             candidates.where(F.col("qcode").isNotNull())
             .select("block_key", "qcode")
             .distinct()
-            .join(maybe_broadcast(meta), "qcode", "left")
-            .select(
-                "block_key",
-                "qcode",
-                jaro_winkler_udf(F.col("block_key"), lbl).alias("jw"),
-                lev_sim_col(F.col("block_key"), lbl).alias("lev"),
-            )
+        )
+        jw_tbl = pem.string_features(pairs, "block_key", entity_meta).select(
+            "block_key", "qcode", "jw", "lev"
         )
         scored = (
             candidates.join(maybe_broadcast(jw_tbl), ["block_key", "qcode"], "left")
@@ -348,8 +336,10 @@ def score_resolve_fused(
         frame), not once per candidate;
       - the entity matrix rides in as a SparkContext broadcast (float64,
         with per-entity seq-norms precomputed in the same dim-sequential
-        fold the oracle uses) — guarded by EMB_BROADCAST_MAX_BYTES, the
-        same size-aware policy as functions/joins.maybe_broadcast;
+        fold the oracle uses), collected once per entity table as a part
+        of the dictionary index (pem.entity_matrix) — guarded by
+        EMB_BROADCAST_MAX_BYTES, the same size-aware policy as
+        functions/joins.maybe_broadcast;
       - cosine accumulates dimension-by-dimension (vectorized across rows)
         — bit-identical to cosine_seq_udf and the oracle's seq_dot;
       - the C5 argmax + P7 threshold run inside the kernel (every
@@ -382,23 +372,9 @@ def score_resolve_fused(
 
     if not fused_policy_ok(entity_embeddings):
         return None
-    pdf = entity_embeddings.select("qcode", "emb").toPandas()
-    mat = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in pdf["emb"]], dtype=np.float64
-    )
-    if mat.size and mat.nbytes > EMB_BROADCAST_MAX_BYTES:
+    bc = pem.entity_matrix(entity_embeddings, EMB_BROADCAST_MAX_BYTES)
+    if bc is None:
         return None
-    qcodes_np = pdf["qcode"].to_numpy(dtype=object)
-    # numeric qcodes for the oracle's tie-break, precomputed once — never
-    # regex-parsed per candidate row
-    qnum = pd.to_numeric(
-        pdf["qcode"].str.replace("^Q", "", regex=True), errors="coerce"
-    ).to_numpy(dtype=np.float64, na_value=np.nan)
-    nb2 = np.zeros(len(mat))
-    for j in range(mat.shape[1] if mat.size else 0):
-        y = mat[:, j]
-        nb2 += y * y
-    bc = spark.sparkContext.broadcast((qcodes_np, qnum, mat, nb2))
     w_prior, w_jw, w_lev, w_cos = W_PRIOR, W_JW, W_LEV, W_COS
 
     import pyarrow as pa

@@ -31,7 +31,10 @@ STAGES = ["mentions", "candidates", "coref", "resolved", "clusters"]
 # storeless run() persists the mentions frame (see below); release after the
 # output is materialized — same contract as coref.release_cache. Long-lived
 # sessions (streaming foreachBatch, notebooks) call this between runs;
-# short-lived ones get it back at session teardown.
+# short-lived ones get it back at session teardown. It releases per-run
+# frames only: the dictionary index (pem's persisted dictionary parts and
+# entity-matrix broadcast) outlives it, so every run and micro-batch over
+# one dictionary shares those parts.
 _PERSISTED: list = []
 
 
@@ -105,7 +108,7 @@ def run(
         mentions = mentions.persist()
         _PERSISTED.append(mentions)
 
-    # the jaro-winkler feature is a dictionary attribute (pem.attach_jw):
+    # the jaro-winkler feature is a dictionary attribute (pem.dictionary):
     # candidates arrive pre-scored on the string kernel, so scoring is a
     # single linear pass and `merged` is consumed exactly once — no
     # materialization needed between coref and scoring

@@ -83,7 +83,8 @@ def incremental_resolve(
         resolved.write.mode("append").parquet(output_dir)
         # the batch output is on disk — drop the run's persisted
         # intermediates so a long-lived stream doesn't accumulate one
-        # cache set per micro-batch
+        # cache set per micro-batch; the dictionary index stays, so every
+        # micro-batch shares one build of the dictionary parts
         pipeline.release_cache()
 
     writer = (

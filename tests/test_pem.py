@@ -64,3 +64,36 @@ def test_pem_flat_rank(spark, tables):
     )
     bad = r.where((F.col("lo") != 1) | (F.col("hi") != F.col("n"))).count()
     assert bad == 0
+
+
+def test_dictionary_index_builds_once_under_concurrent_callers(spark, tables):
+    """Concurrent runs over one dictionary (e.g. a streaming micro-batch
+    thread next to a batch run) share one build of each index part."""
+    import sys
+    import threading
+
+    from refined_spark.operators import pem
+
+    pem.drop_index()
+    got, errors = [], []
+
+    def call():
+        try:
+            got.append(pem.normalized_labels(tables["entity_meta"]))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=call) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors and len(got) == 8
+    assert all(g is got[0] for g in got)
+    assert pem._INDEX["labels"][1] is got[0]

@@ -250,3 +250,113 @@ def test_fused_budget_fallback_to_rowjoin(spark, fixture_paths, tables, monkeypa
         tables["human_qcodes"],
     )
     assert out.where(F.col("qcode").isNotNull()).count() > 0
+
+
+def _index_parts():
+    from refined_spark.operators import pem
+
+    return {name: value for name, (_, value) in pem._INDEX.items()}
+
+
+def _lsh_run(spark, t):
+    out = pipeline.run(spark, t["documents"], t["pem"], t["entity_meta"],
+                       t["entity_embeddings"], t["human_qcodes"], lsh_blocking=True)
+    rows = sorted(tuple(r) for r in out.select(
+        "mention_id", "qcode", "score", "cluster_id").collect())
+    pipeline.release_cache()
+    return rows
+
+
+def test_dictionary_index_built_once_per_dictionary(spark, tables):
+    """A second run over the same dictionary reuses every index part (the
+    same persisted frames and broadcast) and gives the same output."""
+    first = _lsh_run(spark, tables)
+    parts = _index_parts()
+    assert {"labels", "dictionary"} <= parts.keys()
+    assert any(n.startswith("banded") for n in parts)
+    assert any(n.startswith("entity matrix") and v is not None for n, v in parts.items())
+    assert _lsh_run(spark, tables) == first
+    after = _index_parts()
+    assert after.keys() == parts.keys()
+    assert all(after[n] is parts[n] for n in parts)
+
+
+def test_dictionary_index_follows_its_inputs(spark, tables, fixture_paths, tmp_path):
+    """A dictionary with different rows, and a pem parquet rewritten at the
+    same path, each rebuild the index: the run matches one from a fresh
+    index, and differs from the run over the old dictionary."""
+    import os
+    import shutil
+
+    import pyarrow.compute as pc
+
+    from refined_spark.operators import pem
+
+    base = _lsh_run(spark, tables)
+    old = _index_parts()
+    even = F.length("surface_form") % 2 == 0
+    fewer = dict(tables, pem=tables["pem"].where(even))
+    got = _lsh_run(spark, fewer)
+    assert _index_parts()["dictionary"] is not old["dictionary"]
+    assert got != base
+    pem.drop_index()
+    assert _lsh_run(spark, fewer) == got
+
+    path = str(tmp_path / "pem.parquet")
+    tables["pem"].write.parquet(path)
+    before = dict(tables, pem=spark.read.parquet(path))
+    assert _lsh_run(spark, before) == base
+    # rewritten by another writer (a Spark overwrite would also refresh
+    # Spark's own caches of the path): same path, so the same plan hash
+    shutil.rmtree(path)
+    os.makedirs(path)
+    t = pq.read_table(fixture_paths["pem"])
+    t = t.filter(pc.equal(pc.bit_wise_and(pc.utf8_length(t["surface_form"]), 1), 0))
+    pq.write_table(t, os.path.join(path, "part-00000.parquet"))
+    after = dict(tables, pem=spark.read.parquet(path))
+    assert after["pem"].semanticHash() == before["pem"].semanticHash()
+    rewritten = _lsh_run(spark, after)
+    assert rewritten == got
+    pem.drop_index()
+    assert _lsh_run(spark, after) == rewritten
+
+
+def test_dictionary_index_survives_a_new_spark_context(fixture_paths):
+    """Stop the session and start a new one in the same process (a second
+    SparkContext in the same JVM): the run must rebuild the index in the
+    live context, not reuse frames bound to the stopped one."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    script = """
+import json, sys
+from refined_spark.plans import pipeline
+from refined_spark.session import get_spark
+
+paths = json.loads(sys.argv[1])
+
+def run():
+    spark = get_spark(master="local[2]", shuffle_partitions=4)
+    spark.sparkContext.setLogLevel("ERROR")
+    t = {k: spark.read.parquet(p) for k, p in paths.items()}
+    out = pipeline.run(spark, t["documents"], t["pem"], t["entity_meta"],
+                       t["entity_embeddings"], t["human_qcodes"], lsh_blocking=True)
+    rows = sorted(tuple(r) for r in out.select("mention_id", "qcode", "score").collect())
+    spark.stop()
+    return rows
+
+first, second = run(), run()
+assert first and first == second, "runs in two contexts differ"
+print("SAME", len(first))
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")])))
+    proc = subprocess.run(
+        [sys.executable, "-c", script, json.dumps(fixture_paths)],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "SAME" in proc.stdout
