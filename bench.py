@@ -135,7 +135,10 @@ def run_er_pipeline(spark, corpus_dir: str, **pipeline_kwargs) -> tuple[float, i
     )
     materialize(out)
     dt = time.time() - t0
-    _unpersist_all(spark)
+    # release this run's caches but keep the dictionary index, which every
+    # er_pipeline sample over the same dictionary reuses
+    pipeline.release_cache()
+    spark.sparkContext._jvm.System.gc()
     return dt, n_docs
 
 
@@ -989,7 +992,7 @@ def _write_bench_md(results, eff, row, eff_str, GATE_PAIR, WIDE_PAIR) -> None:
             ab = json.load(f)
         ab_lines = [
             "",
-            "## Fused vs row-join scoring A/B (jobs/ab_fused.py)",
+            "## Fused vs row-join scoring A/B (jobs/ab_fused_result.json)",
             "",
             "Full er_pipeline, interleaved arms in ONE session (same JVM",
             "warmth), 1 warm-up per arm then alternating measured rounds at",

@@ -10,11 +10,19 @@ Scale notes:
   - exact dedup: one hash aggregate on the content hash; at 100 TB prefer
     hashing first, then groupBy the 8-byte hash (tiny shuffle payload) —
     that is exactly what these plans do (never shuffle full text).
-  - MinHash-LSH: signatures computed JVM-side (higher-order functions, one
-    md5 per shingle); banding explodes to (band_id, band_hash) keys; the
-    bucket self-join is an equi-join on the band key, and hot buckets
-    (boilerplate docs) are bounded by banding width — salt or cap bucket
-    size if a real corpus degenerates.
+  - MinHash-LSH: signatures come from an Arrow kernel (mapInPandas: one
+    md5 per distinct shingle, one vectorized min per permutation); banding
+    posexplodes them to (band_id, band_hash) keys.
+  - pairs: LSH buckets, SimHash pigeonhole pieces and n-gram postings all
+    emit pairs through ONE block-pair kernel (see the comment above
+    _n_blocks): rows replicate to B block-pair tasks, each task emits,
+    dedups and filters its share of the pairs in numpy, and nothing
+    pair-shaped is shuffled — a hot bucket's O(d^2) pairs split across
+    B(B+1)/2 tasks instead of running in one.
+  - caps: splitting a hot bucket spreads its O(d^2) work but does not
+    shrink it, so boilerplate buckets (LSH bucket_cap, SimHash bucket_cap)
+    and grams (n-gram df_cap) above a cap are dropped; both bucket caps
+    report the doc-slots they drop through `observe` metrics.
   - candidate pairs are verified with exact Jaccard before linking, then
     clustered with the CC job (transitive closure of near-dup edges).
 """
@@ -37,42 +45,17 @@ def normalized_text_col(text: Column) -> Column:
     return F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
 
 
-def ordered_pairs_col(ds: Column) -> Column:
-    """All (ds[i], ds[j]) i<j pairs of a sorted posting list, as an array
-    of (doc_a, doc_b) structs — the JVM-side pair emitter shared by every
-    posting-list blocking plan here (LSH band buckets, n-gram inverted
-    index, SimHash pigeonhole blocks). transform+slice+flatten: no lateral
-    self-join, no pair re-association by key."""
-    return F.flatten(
-        F.transform(
-            ds,
-            lambda x, i: F.transform(
-                F.slice(ds, i + F.lit(2), F.size(ds)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-
-
-def _is_integral(dtype) -> bool:
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    return isinstance(dtype, (ByteType, ShortType, IntegerType, LongType))
-
-
 # --------------------------------------------------------------------------
-# Block-pair pair generation (the guide-§2 shape for all-pairs work):
-# docs hash into B blocks; the unordered pair (a, b) is processed by exactly
-# ONE task, the one owning (block(a), block(b)) — so candidate emission,
-# deduplication/counting AND the similarity filter all happen task-locally
-# in numpy, and nothing pair-shaped is ever shuffled. Replication cost is
-# one copy of each doc's (small) key row per block — O(n·B) bytes for
-# O(n^2/B^2)-per-task work; B grows as sqrt(cores).
-#
-# The old plan (posting-list explode -> global distinct/count) emitted the
-# full O(sum d^2) pair multiset through an interpreted higher-order-function
-# projection and shuffled it; AQE additionally coalesced the few-MB posting
-# frame down to a handful of tasks, so the quadratic work ran nearly serial.
+# Block-pair pair generation (the guide-§2 shape for all-pairs work), the
+# ONE way every pair operator here emits pairs: docs hash into B blocks; the
+# unordered pair (a, b) is processed by exactly ONE task, the one owning
+# (block(a), block(b)) — so candidate emission, deduplication/counting AND
+# the similarity filter all happen task-locally in numpy, and nothing
+# pair-shaped is ever shuffled. Replication cost is one copy of each doc's
+# (small) key row per block — O(n·B) bytes for O(n^2/B^2)-per-task work;
+# B grows as sqrt(cores). Inside a task, doc ids are factorized with
+# sort=True, so the pair kernel runs on int codes whose order is the id
+# order (doc_a < doc_b for any orderable id type, strings included).
 # --------------------------------------------------------------------------
 
 
@@ -97,23 +80,30 @@ def _pid_explode(blk: Column, n_blocks: int) -> Column:
     )
 
 
-def _per_pid(process):
-    """mapInPandas wrapper: concatenates the partition's batches (a hash
-    partition may hold several pids, and one pid's rows may span Arrow
-    batches), then runs `process` per pid group."""
+def _block_pair_map(rows: DataFrame, process, schema: str) -> DataFrame:
+    """Replicate each (doc_id, ...) row to the B block-pair tasks its doc
+    takes part in (columns `blk`, `pid` added) and run `process(g, i, j)`
+    once per task (i <= j its two blocks). One Python partition may hold
+    several pids and one pid's rows may span Arrow batches, so the
+    partition's batches are concatenated before grouping by pid."""
     import pandas as pd
+
+    nb = _n_blocks(rows.sparkSession)
+    rep = rows.withColumn(
+        "blk", F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int")
+    ).withColumn("pid", _pid_explode(F.col("blk"), nb))
 
     def f(batches):
         chunks = list(batches)
         if not chunks:
             return
         pdf = pd.concat(chunks, ignore_index=True)
-        for _, g in pdf.groupby("pid", sort=False):
-            out = process(g)
+        for pid, g in pdf.groupby("pid", sort=False):
+            out = process(g, *divmod(int(pid), nb))
             if out is not None and len(out):
                 yield out
 
-    return f
+    return rep.repartition(2 * nb * nb, "pid").mapInPandas(f, schema=schema)
 
 
 def _dedup_sorted_pairs(a, b, c=None):
@@ -193,9 +183,9 @@ class _PairAccumulator:
 
 def _segment_pairs(codes, vals, blk, i, j, acc: "_PairAccumulator") -> None:
     """Feed the cross-block (i != j) or within-block (i == j) pairs of
-    every bucket segment into `acc`. `codes` must be the primary sort key
-    and `vals` (doc ids) the secondary, pre-sorted ascending; emitted
-    pairs have a < b element-wise."""
+    every bucket segment into `acc`. `codes` (bucket keys) must be the
+    primary sort key and `vals` (doc id codes) the secondary, pre-sorted
+    ascending; emitted pairs have a < b element-wise."""
     import numpy as np
 
     bounds = np.flatnonzero(codes[1:] != codes[:-1]) + 1
@@ -217,6 +207,57 @@ def _segment_pairs(codes, vals, blk, i, j, acc: "_PairAccumulator") -> None:
             la = np.repeat(left, len(right))
             rb = np.tile(right, len(left))
             acc.add(np.minimum(la, rb), np.maximum(la, rb))
+
+
+def _task_pairs(keys, ids, blk, i, j, counts: bool = False):
+    """Every unique pair of docs sharing a key, among one block-pair
+    task's rows (parallel arrays: key, doc id, doc block). Returns
+    (ra, rb[, cnt]) — for each pair, the index of one row of doc_a and
+    one row of doc_b (ids[ra] < ids[rb]), and with `counts` the number of
+    keys the two share — or None when the task has no pair."""
+    import numpy as np
+    import pandas as pd
+
+    codes, uniq = pd.factorize(ids, sort=True)
+    order = np.lexsort((codes, keys))
+    acc = _PairAccumulator(counts=counts)
+    _segment_pairs(keys[order], codes[order], blk[order], i, j, acc)
+    res = acc.result()
+    if res is None:
+        return None
+    row_of = np.empty(len(uniq), dtype=np.int64)
+    row_of[codes] = np.arange(len(codes))
+    return (row_of[res[0]], row_of[res[1]], *res[2:])
+
+
+def _keyed_pairs(rows: DataFrame, keys: list, bucket_cap: int | None,
+                 observation, metric: str, emit, schema: str) -> DataFrame:
+    """Pairs of docs sharing a bucket of (doc_id, *keys, ...) rows. Bucket
+    sizes are aggregated once globally (the cap and >= 2 filters need
+    GLOBAL membership); buckets over `bucket_cap` are dropped and their
+    rows summed into the `observe` metric `metric`; surviving rows go to
+    their block-pair tasks, where `emit(g, ra, rb)` turns the task's
+    unique pairs into output rows."""
+    # a null id has no place in the id order (factorize codes it -1)
+    rows = rows.where(F.col("doc_id").isNotNull())
+    bsizes = rows.groupBy(*keys).agg(F.count("*").alias("__bsz"))
+    if bucket_cap is not None:
+        bsizes = bsizes.observe(
+            observation,
+            F.sum(
+                F.when(F.col("__bsz") > bucket_cap, F.col("__bsz")).otherwise(0)
+            ).alias(metric),
+        ).where(F.col("__bsz") <= bucket_cap)
+    keep = bsizes.where(F.col("__bsz") >= 2).select(*keys)
+
+    def process(g, i, j):
+        res = _task_pairs(
+            g.groupby(keys, sort=False).ngroup().to_numpy(),
+            g["doc_id"].to_numpy(), g["blk"].to_numpy(), i, j,
+        )
+        return None if res is None else emit(g, *res)
+
+    return _block_pair_map(rows.join(keep, keys, "left_semi"), process, schema)
 
 
 def exact_duplicates(documents: DataFrame, id_col: str = "doc_id",
@@ -307,9 +348,8 @@ def lsh_candidate_pairs(
     """Band the signature into `bands` groups of rows; docs sharing a band
     hash become candidate pairs. Returns (doc_a, doc_b) distinct, a < b.
 
-    Plan: posexplode signature -> band key = (band_id, hash of band slice);
-    self-join per band key. The join key includes band_id so buckets from
-    different bands never cross-join.
+    Band key = (band_id, hash of the band's slice): band_id is part of the
+    key so buckets from different bands never pair up.
 
     `num_hashes` must match the signature length — threaded as a parameter
     (the caller always knows it) so building the plan never runs a Spark
@@ -322,29 +362,22 @@ def lsh_candidate_pairs(
     web corpora. Buckets larger than the cap are dropped entirely (a
     bucket that hot is boilerplate, not near-dup signal; any true
     near-dup pair in it almost surely shares a calmer bucket in another
-    band). The default is FINITE on purpose: the posting-list plan
-    materializes a whole bucket's ids as one row and emits its O(d^2)
-    pairs from one task, so an uncapped boilerplate bucket that the old
-    distributed self-join merely made slow would OOM a single executor
-    here; 2000 ids ~ 2M pairs is comfortably within a task. Pass None to
-    disable (only with a corpus known boilerplate-free). NOT silent: the
-    frame carries an `observe` metric `lsh_dropped_bucket_rows`
-    (doc-slots discarded by the cap), surfaced by the caller's action via
-    an Observation/QueryExecution listener (the A9 telemetry channel;
-    tests read it directly).
+    band). The default is FINITE on purpose: a capped bucket's O(d^2)
+    pairs split across the block-pair tasks, but still cost O(d^2) work
+    in total; 2000 ids ~ 2M pairs. Pass None to disable (only with a
+    corpus known boilerplate-free). NOT silent: the frame carries an
+    `observe` metric `lsh_dropped_bucket_rows` (doc-slots discarded by
+    the cap), surfaced by the caller's action via an
+    Observation/QueryExecution listener (the A9 telemetry channel; tests
+    read it directly).
 
-    Plan (integral doc ids, round 6): global bucket-size aggregate (the
-    cap and >=2 filters need global membership) -> surviving banded rows
-    replicate to their B block-pair tasks -> each task emits and dedups
-    its share of every bucket's pairs locally in numpy (see the
-    block-pair header comment above) — nothing pair-shaped is shuffled
-    and a near-cap bucket's O(d^2) splits across all tasks. Non-integral
-    ids keep the posting-list plan: per-bucket sorted doc lists, pairs
-    emitted JVM-side (ordered_pairs_col), then one distinct. bucket_cap
-    bounds the per-bucket pair explosion on both paths."""
+    Plan: global bucket-size aggregate (cap and >= 2 filters) -> surviving
+    banded rows replicate to their B block-pair tasks -> each task emits
+    and dedups its share of every bucket's pairs locally in numpy
+    (block-pair header comment above) — nothing pair-shaped is shuffled
+    and a near-cap bucket's O(d^2) splits across all tasks."""
     from refined_spark.functions.hashing import band_hashes_col
 
-    import numpy as np
     import pandas as pd
 
     banded = signatures.select(
@@ -353,73 +386,16 @@ def lsh_candidate_pairs(
             band_hashes_col(F.col("sig"), bands, num_hashes)
         ).alias("band_id", "band_hash"),
     )
-    elem = signatures.schema["doc_id"].dataType
-    if _is_integral(elem):
-        # Block-pair plan (header comment above): bucket sizes are
-        # aggregated once globally (the cap and >=2 filters need GLOBAL
-        # bucket membership), surviving banded rows replicate to their B
-        # block-pair tasks, and each task emits + dedups its share of
-        # every bucket's pairs locally — a hot near-cap bucket's O(d^2)
-        # pairs split evenly across all B(B+1)/2 tasks instead of
-        # exploding out of one posting-list row, and the global
-        # `distinct` shuffle of the pair multiset disappears.
-        bsizes = banded.groupBy("band_id", "band_hash").agg(
-            F.count("*").alias("__bsz")
-        )
-        if bucket_cap is not None:
-            bsizes = bsizes.observe(
-                observation if observation is not None else "lsh_bucket_cap",
-                F.sum(
-                    F.when(F.col("__bsz") > bucket_cap, F.col("__bsz"))
-                    .otherwise(0)
-                ).alias("lsh_dropped_bucket_rows"),
-            ).where(F.col("__bsz") <= bucket_cap)
-        keep = bsizes.where(F.col("__bsz") >= 2).select("band_id", "band_hash")
-        nb = _n_blocks(signatures.sparkSession)
-        rep = (
-            banded.join(keep, ["band_id", "band_hash"], "left_semi")
-            .withColumn(
-                "blk", F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int")
-            )
-            .withColumn("pid", _pid_explode(F.col("blk"), nb))
-        )
 
-        def process(g: pd.DataFrame):
-            pid = int(g["pid"].iloc[0])
-            i, j = divmod(pid, nb)
-            vals = g["doc_id"].to_numpy()
-            blk = g["blk"].to_numpy()
-            codes = pd.factorize(
-                g["band_id"].astype(str) + "|" + g["band_hash"]
-            )[0]
-            order = np.lexsort((vals, codes))
-            acc = _PairAccumulator(counts=False)
-            _segment_pairs(codes[order], vals[order], blk[order], i, j, acc)
-            res = acc.result()
-            if res is None:
-                return None
-            return pd.DataFrame({"doc_a": res[0], "doc_b": res[1]})
+    def emit(g, ra, rb):
+        ids = g["doc_id"].to_numpy()
+        return pd.DataFrame({"doc_a": ids[ra], "doc_b": ids[rb]})
 
-        t = elem.simpleString()
-        return rep.repartition(2 * nb * nb, "pid").mapInPandas(
-            _per_pid(process), schema=f"doc_a {t}, doc_b {t}"
-        )
-
-    posts = banded.groupBy("band_id", "band_hash").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ds")
-    )
-    if bucket_cap is not None:
-        posts = posts.observe(
-            observation if observation is not None else "lsh_bucket_cap",
-            F.sum(
-                F.when(F.size("ds") > bucket_cap, F.size("ds")).otherwise(0)
-            ).alias("lsh_dropped_bucket_rows"),
-        ).where(F.size("ds") <= bucket_cap)
-    return (
-        posts.where(F.size("ds") >= 2)
-        .select(F.explode(ordered_pairs_col(F.col("ds"))).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
+    t = signatures.schema["doc_id"].dataType.simpleString()
+    return _keyed_pairs(
+        banded, ["band_id", "band_hash"], bucket_cap,
+        observation if observation is not None else "lsh_bucket_cap",
+        "lsh_dropped_bucket_rows", emit, f"doc_a {t}, doc_b {t}",
     )
 
 
@@ -611,77 +587,68 @@ def simhash_pairs(documents: DataFrame, num_bits: int = 64, radius: int = 3,
                   text_col: str = "text", bucket_cap: int | None = 10000,
                   observation=None) -> DataFrame:
     """All pairs within hamming distance <= radius of each other's SimHash
-    — EXACT (recall 1, unlike probabilistic LSH banding): pigeonhole block
-    partition. The b-bit hash splits into radius+1 contiguous blocks; two
+    — EXACT (recall 1, unlike probabilistic LSH banding): pigeonhole
+    partition. The b-bit hash splits into radius+1 contiguous pieces; two
     hashes differing in <= radius bits must agree on at least one whole
-    block, so blocking on (block_id, block_value) misses nothing. Returns
+    piece, so blocking on (piece, piece value) misses nothing. Returns
     (doc_a, doc_b, hamming), doc_a < doc_b. Defaults are the canonical
     web-dedup parameters (Manku et al., WWW'07): 64-bit hash, radius 3,
-    4 blocks of 16 bits.
+    4 pieces of 16 bits.
 
-    Plan: explode radius+1 block keys per doc (bit shift+mask, pure JVM),
-    posting-list pair emission per block bucket (ordered_pairs_col — same
-    shape as LSH/ngram, never a self-join), distinct (a pair can agree on
-    several blocks), then one join back to the hashes for the
-    bit_count(xor) verify.
+    Plan: radius+1 (piece, value) keys per doc (bit shift+mask, pure JVM),
+    each row carrying the doc's hash, into the block-pair kernel (block-pair
+    header comment above). Each task dedups its pairs (a pair can agree on
+    several pieces) and keeps those with popcount(xor) <= radius, so no
+    distinct and no join back to the hashes.
 
     Scale honesty: the blow-up factor is radius+1 rows per doc (constant),
-    but bucket granularity is bounded by the block VALUE space,
+    but bucket granularity is bounded by the piece VALUE space,
     2^(num_bits // (radius+1)) — at 64 bits / radius 3 that is 2^16 values
-    per block (fine up to ~10^9 docs of diverse text), while at 16 bits /
-    radius 3 it collapses to 16 values per block and every "bucket" holds
-    ~n/16 of the corpus: expect posting lists O(n) and O(n^2) pair
-    emission from single tasks. bucket_cap is the guard: buckets larger
-    than the cap are dropped (identical-hash mass that hot is boilerplate;
-    a true <=radius pair in a dropped bucket almost surely also agrees on
-    a calmer block), and the dropped doc-slot count is surfaced through
-    the non-silent `observe` metric `simhash_dropped_bucket_rows` (A9
-    telemetry channel, same contract as lsh_candidate_pairs)."""
-    nb = radius + 1
-    if num_bits < nb:
-        raise ValueError(f"num_bits={num_bits} < radius+1={nb}")
+    per piece (fine up to ~10^9 docs of diverse text), while at 16 bits /
+    radius 3 it collapses to 16 values per piece and every "bucket" holds
+    ~n/16 of the corpus. A hot piece value's O(d^2) pairs split across the
+    B(B+1)/2 block-pair tasks, but their total is still O(d^2). bucket_cap
+    is the guard: buckets larger than the cap are dropped (identical-hash
+    mass that hot is boilerplate; a true <=radius pair in a dropped bucket
+    almost surely also agrees on a calmer piece), and the dropped doc-slot
+    count is surfaced through the non-silent `observe` metric
+    `simhash_dropped_bucket_rows` (A9 telemetry channel, same contract as
+    lsh_candidate_pairs)."""
+    import numpy as np
+    import pandas as pd
+
+    n_pieces = radius + 1
+    if num_bits < n_pieces:
+        raise ValueError(f"num_bits={num_bits} < radius+1={n_pieces}")
     h = simhash_table(documents, num_bits, text_col).withColumnRenamed(
         "simhash", "sh"
     )
-    widths = [num_bits // nb + (1 if i < num_bits % nb else 0) for i in range(nb)]
-    lows = [sum(widths[:i]) for i in range(nb)]
-    keys = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("blk"),
-                F.shiftright(F.col("sh"), lo)
-                .bitwiseAND(F.lit((1 << w) - 1))
-                .alias("val"),
-            )
-            for i, (lo, w) in enumerate(zip(lows, widths))
-        ]
-    )
-    posts = (
-        h.select("doc_id", F.explode(keys).alias("k"))
-        .groupBy("k.blk", "k.val")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-    )
-    if bucket_cap is not None:
-        posts = posts.observe(
-            observation if observation is not None else "simhash_bucket_cap",
-            F.sum(
-                F.when(F.size("ds") > bucket_cap, F.size("ds")).otherwise(0)
-            ).alias("simhash_dropped_bucket_rows"),
-        ).where(F.size("ds") <= bucket_cap)
-    pairs = (
-        posts.where(F.size("ds") >= 2)
-        .select(F.explode(ordered_pairs_col(F.col("ds"))).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-    ha = h.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    hb = h.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        pairs.join(ha, "doc_a")
-        .join(hb, "doc_b")
-        .select("doc_a", "doc_b", ham.cast("int").alias("hamming"))
-        .where(F.col("hamming") <= radius)
+    widths = [num_bits // n_pieces + (1 if i < num_bits % n_pieces else 0)
+              for i in range(n_pieces)]
+    lows = [sum(widths[:i]) for i in range(n_pieces)]
+    pieces = F.array(*[
+        F.shiftright(F.col("sh"), lo).bitwiseAND(F.lit((1 << w) - 1))
+        for lo, w in zip(lows, widths)
+    ])
+    rows = h.select("doc_id", "sh", F.posexplode(pieces).alias("piece", "val"))
+    # popcount of a 64-bit xor: per-byte table, summed over its 8 bytes
+    pop8 = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(axis=1)
+
+    def emit(g, ra, rb):
+        ids, sh = g["doc_id"].to_numpy(), g["sh"].to_numpy(dtype=np.int64)
+        ham = pop8[(sh[ra] ^ sh[rb]).view(np.uint8)].reshape(-1, 8).sum(axis=1)
+        keep = ham <= radius
+        return pd.DataFrame({
+            "doc_a": ids[ra[keep]], "doc_b": ids[rb[keep]],
+            "hamming": ham[keep].astype(np.int32),
+        })
+
+    t = documents.schema["doc_id"].dataType.simpleString()
+    return _keyed_pairs(
+        rows, ["piece", "val"], bucket_cap,
+        observation if observation is not None else "simhash_bucket_cap",
+        "simhash_dropped_bucket_rows", emit,
+        f"doc_a {t}, doc_b {t}, hamming int",
     )
 
 
@@ -695,21 +662,23 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = 3, threshold: float = 0.5
     boilerplate phrase shared by d docs would otherwise force O(d^2) work
     AND dominate the similarity of unrelated docs). df_cap=None keeps all.
 
-    Plan (integral doc ids, round 6): explode distinct grams,
-    groupBy(gram) -> capped posting lists (one shuffle on the gram key),
-    re-assemble per-doc CAPPED gram-id arrays, replicate them to their B
-    block-pair tasks, and let each task build its local inverted index
-    in numpy, count its share of the pair multiset (sum over tasks ==
-    the global count) and apply the Jaccard filter task-locally —
-    n_a/n_b are array lengths, so no size joins and no pair-shaped
-    shuffle (block-pair header comment above). Non-integral ids keep the
-    round-3 posting-list plan: JVM pair emission + global count + two
-    size joins. Both superseded the round-2 inverted-index self-join
-    (which re-ran array_intersect per pair; ~8x slower at sf0.1)."""
+    Plan: explode distinct grams, groupBy(gram) -> capped posting lists
+    (one shuffle on the gram key), re-assemble per-doc CAPPED gram-id
+    arrays (singleton grams included: they count in n_a/n_b), replicate
+    them to their B block-pair tasks, and let each task count the grams
+    each of its pairs shares (sum over tasks == the global count) and
+    apply the Jaccard filter task-locally — n_a/n_b are array lengths, so
+    no size joins and no pair-shaped shuffle (block-pair header comment
+    above). n_common, n_a, n_b are exact integers; jaccard is one double
+    division, rounded with the engine-wide HALF_UP twin of F.round(x, 6)."""
+    import numpy as np
+    import pandas as pd
+
     from refined_spark.functions.hashing import (
         split_tokens_col,
         token_shingles_from_tokens_col,
     )
+    from refined_spark.functions.similarity import round6_half_up
 
     # two selects: bind the token array to an attribute so the shingle
     # lambda does not re-evaluate the lower/trim/regexp/split chain per
@@ -726,97 +695,36 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = 3, threshold: float = 0.5
         ).alias("grams"),
     )
     inv = grams.select("doc_id", F.explode("grams").alias("g"))
-    posts = inv.groupBy("g").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ds")
-    )
+    posts = inv.groupBy("g").agg(F.collect_list("doc_id").alias("ds"))
     if df_cap is not None:
         posts = posts.where(F.size("ds") <= df_cap)
-    elem = grams.schema["doc_id"].dataType
-    if _is_integral(elem):
-        # Block-pair plan (header comment above): per-doc CAPPED gram-id
-        # arrays replicate to their B block-pair tasks; each task builds
-        # its local inverted index in numpy, emits + counts its share of
-        # the pair multiset (sum over tasks == the old global count(*)),
-        # and applies the Jaccard filter locally — n_a/n_b are just the
-        # array lengths, so the two size joins and the 10^8-row pair
-        # shuffle of the old plan disappear entirely. n_common, n_a, n_b
-        # are exact integers; jaccard is the identical single double
-        # division, rounded with the engine-wide HALF_UP twin.
-        import numpy as np
-        import pandas as pd
-
-        from refined_spark.functions.similarity import round6_half_up
-
-        nb = _n_blocks(documents.sparkSession)
-        docarr = (
-            posts.select(F.monotonically_increasing_id().alias("gid"), "ds")
-            .select("gid", F.explode("ds").alias("doc_id"))
-            .groupBy("doc_id")
-            .agg(F.collect_list("gid").alias("gids"))
-        )
-        rep = docarr.withColumn(
-            "blk", F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int")
-        ).withColumn("pid", _pid_explode(F.col("blk"), nb))
-
-        def process(g: pd.DataFrame):
-            pid = int(g["pid"].iloc[0])
-            i, j = divmod(pid, nb)
-            ids = g["doc_id"].to_numpy()
-            blk_doc = g["blk"].to_numpy()
-            lens = g["gids"].map(len).to_numpy()
-            doc_pos = np.repeat(np.arange(len(g)), lens)
-            gid = np.concatenate(list(g["gids"]))
-            vals = ids[doc_pos]
-            blk = blk_doc[doc_pos]
-            order = np.lexsort((vals, gid))
-            acc = _PairAccumulator(counts=True)
-            _segment_pairs(gid[order], vals[order], blk[order], i, j, acc)
-            res = acc.result()
-            if res is None:
-                return None
-            a, b, c = res
-            sid = np.argsort(ids)
-            ids_sorted, n_sorted = ids[sid], lens[sid]
-            n_a = n_sorted[np.searchsorted(ids_sorted, a)]
-            n_b = n_sorted[np.searchsorted(ids_sorted, b)]
-            jacc = c.astype(np.float64) / (n_a + n_b - c).astype(np.float64)
-            keep = jacc >= threshold
-            if not keep.any():
-                return None
-            return pd.DataFrame({
-                "doc_a": a[keep], "doc_b": b[keep],
-                "jaccard": np.array([round6_half_up(x) for x in jacc[keep]],
-                                    dtype=np.float64),
-            })
-
-        t = elem.simpleString()
-        return rep.repartition(2 * nb * nb, "pid").mapInPandas(
-            _per_pid(process), schema=f"doc_a {t}, doc_b {t}, jaccard double"
-        )
-
-    sizes = (
-        posts.select(F.explode("ds").alias("doc_id"))
+    docarr = (
+        posts.select(F.monotonically_increasing_id().alias("gid"), "ds")
+        .select("gid", F.explode("ds").alias("doc_id"))
         .groupBy("doc_id")
-        .agg(F.count("*").alias("n_grams"))
+        .agg(F.collect_list("gid").alias("gids"))
     )
-    common = (
-        posts.select(F.explode(ordered_pairs_col(F.col("ds"))).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sz_a = sizes.select(
-        F.col("doc_id").alias("doc_a"), F.col("n_grams").alias("n_a")
-    )
-    sz_b = sizes.select(
-        F.col("doc_id").alias("doc_b"), F.col("n_grams").alias("n_b")
-    )
-    jacc = F.col("n_common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common")
-    ).cast("double")
-    return (
-        common.join(sz_a, "doc_a")
-        .join(sz_b, "doc_b")
-        .where(jacc >= threshold)
-        .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
+
+    def process(g, i, j):
+        lens = g["gids"].map(len).to_numpy()
+        pos = np.repeat(np.arange(len(g)), lens)
+        ids, n_grams = g["doc_id"].to_numpy()[pos], lens[pos]
+        res = _task_pairs(np.concatenate(list(g["gids"])), ids,
+                          g["blk"].to_numpy()[pos], i, j, counts=True)
+        if res is None:
+            return None
+        ra, rb, c = res
+        jacc = c.astype(np.float64) / (n_grams[ra] + n_grams[rb] - c)
+        keep = jacc >= threshold
+        if not keep.any():
+            return None
+        return pd.DataFrame({
+            "doc_a": ids[ra[keep]], "doc_b": ids[rb[keep]],
+            "jaccard": np.array([round6_half_up(x) for x in jacc[keep]],
+                                dtype=np.float64),
+        })
+
+    t = grams.schema["doc_id"].dataType.simpleString()
+    return _block_pair_map(
+        docarr, process, f"doc_a {t}, doc_b {t}, jaccard double"
     )

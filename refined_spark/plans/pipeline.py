@@ -67,7 +67,6 @@ def run(
     subclass_edges: DataFrame | None = None,
     class_vocab: list[str] | None = None,
     typing_threshold: float = 0.5,
-    fused_scoring: bool | None = None,
 ) -> DataFrame:
     """Returns (mention_id, doc_id, block_key, offset, qcode, score,
     cluster_id[, failed_class_check]). With a StageStore, each stage is
@@ -170,23 +169,19 @@ def run(
     # scoring path selection (size-aware, like the broadcast policy): the
     # fused cogrouped kernel needs the entity matrix on the driver — legal
     # only at dictionary scale (EMB_BROADCAST_MAX_BYTES); beyond that the
-    # row-join plan is the only safe shape. The auto policy reads Catalyst
+    # row-join plan is the only safe shape. The policy reads Catalyst
     # plan statistics only (fused_policy_ok — no Spark job before the
     # pipeline's first real action), and score_resolve_fused returns None
     # instead of raising if the collected matrix still lands over budget,
     # so an optimistic estimate degrades to the row-join plan, never to a
     # crash.
-    use_fused = fused_scoring
-    if use_fused is None:
-        use_fused = scoring.fused_policy_ok(entity_embeddings)
-
     def make_scored():
         ctx = scoring.mention_window_embeddings(documents)
         return scoring.score_candidates(
             merged, entity_meta, entity_embeddings, ctx
         )
 
-    if use_fused:
+    if scoring.fused_policy_ok(entity_embeddings):
         def make_resolved():
             ctx = scoring.mention_window_embeddings(documents)
             r = scoring.score_resolve_fused(

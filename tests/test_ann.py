@@ -121,10 +121,13 @@ def test_ivf_partial_probe_recall(spark, vectors):
     assert recall >= 0.5
 
 
-def test_simhash_pairs_exact_recall(spark):
+@pytest.mark.parametrize("doc_id", [
+    ("long", lambda i: i), ("string", lambda i: f"d{i}"),
+], ids=["long", "string"])
+def test_simhash_pairs_exact_recall(spark, doc_id):
     """Pigeonhole blocking is lossless: simhash_pairs == brute-force pairs
     within the hamming radius (including radius 0 and the degenerate
-    identical-doc case)."""
+    identical-doc case), for long and for string doc ids."""
     from refined_spark.operators.dedup import simhash_col, simhash_pairs
 
     texts = [
@@ -135,8 +138,11 @@ def test_simhash_pairs_exact_recall(spark):
         "completely different text about maritime law",  # exact dup
         "yet another unrelated document entirely here",
     ]
+    id_type, make_id = doc_id
     df = spark.createDataFrame(
-        [(f"d{i}", t) for i, t in enumerate(texts)], "doc_id string, text string"
+        [(make_id(i), t) for i, t in enumerate(texts)]
+        + [(None, texts[4])],  # a null id pairs with nothing
+        f"doc_id {id_type}, text string",
     )
     from pyspark.sql import functions as F
 
@@ -145,16 +151,17 @@ def test_simhash_pairs_exact_recall(spark):
         for r in df.select(
             "doc_id", simhash_col(F.col("text"), 16).alias("sh")
         ).collect()
+        if r.doc_id is not None
     }
     for radius in (0, 2, 4):
         expect = {
-            (a, b)
+            (a, b, bin(hashes[a] ^ hashes[b]).count("1"))
             for a in hashes
             for b in hashes
             if a < b and bin(hashes[a] ^ hashes[b]).count("1") <= radius
         }
         got = {
-            (r.doc_a, r.doc_b)
+            (r.doc_a, r.doc_b, r.hamming)
             for r in simhash_pairs(df, num_bits=16, radius=radius).collect()
         }
         assert got == expect, (radius, got, expect)

@@ -171,3 +171,28 @@ def test_lsh_hot_bucket_cap_bounds_degenerate_corpus(spark):
     pairs2 = lsh_candidate_pairs(sigs2, bands=4, num_hashes=8, bucket_cap=10)
     got = {(r.doc_a, r.doc_b) for r in pairs2.collect()}
     assert got == {("u1", "u2")}
+
+
+def test_simhash_hot_bucket_cap_bounds_degenerate_corpus(spark):
+    """n identical docs share every pigeonhole bucket: uncapped, all
+    n(n-1)/2 pairs come back at hamming 0; with bucket_cap every bucket
+    is hotter than the cap, no pair comes back, and the Observation
+    reports all (radius+1)*n doc-slots as dropped."""
+    from pyspark.sql import Observation
+
+    from refined_spark.operators.dedup import simhash_pairs
+
+    n, radius = 30, 3
+    docs = spark.createDataFrame(
+        [(f"d{i:03d}", "the same boilerplate footer text " * 4) for i in range(n)],
+        "doc_id string, text string",
+    )
+    got = simhash_pairs(docs, radius=radius, bucket_cap=None).collect()
+    assert sorted((r.doc_a, r.doc_b, r.hamming) for r in got) == [
+        (f"d{a:03d}", f"d{b:03d}", 0) for a in range(n) for b in range(a + 1, n)
+    ]
+
+    obs = Observation("simhash_cap_test")
+    capped = simhash_pairs(docs, radius=radius, bucket_cap=10, observation=obs)
+    assert capped.count() == 0
+    assert obs.get["simhash_dropped_bucket_rows"] == (radius + 1) * n

@@ -1,8 +1,9 @@
 """Round-6 optimization kernels: every rewritten fast path must equal its
-original JVM formulation row-for-row — the engine-vs-oracle parity test
-covers the catalog queries, these cover the operator internals directly
-(including paths the catalog does not exercise, e.g. the string-id JVM
-fallback vs the integral-id block kernel on the same corpus)."""
+simple formulation row-for-row — the engine-vs-oracle parity test covers
+the catalog queries, these cover the operator internals directly. The
+block-pair pair operators are checked against brute-force pair sets
+computed in Python from values Spark produces, for long and for string
+doc ids (the catalog queries only use long ids)."""
 
 import numpy as np
 import pytest
@@ -81,41 +82,87 @@ def test_simhash_table_equals_simhash_col(spark):
         assert got == want, bits
 
 
-def test_lsh_pairs_block_kernel_equals_jvm_fallback(spark):
-    """Integral doc ids take the block-pair numpy kernel; string ids take
-    the original posting-list JVM plan — same corpus, same pair set."""
+def _pairs_sharing_a_key(keys_by_doc):
+    """Brute force: every (a, b), a < b, whose key sets intersect."""
+    return {
+        (a, b)
+        for a, ka in keys_by_doc.items()
+        for b, kb in keys_by_doc.items()
+        if a < b and ka & kb
+    }
+
+
+@pytest.mark.parametrize("corpus", [_docs_int, _docs_str],
+                         ids=["long", "string"])
+def test_lsh_pairs_equal_brute_force(spark, corpus):
+    """lsh_candidate_pairs == all pairs sharing a (band_id, band_hash)
+    bucket, computed in Python from the band hashes Spark produces —
+    for long and for string doc ids."""
+    from refined_spark.functions.hashing import band_hashes_col
     from refined_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signatures,
     )
 
-    fast = lsh_candidate_pairs(
-        minhash_signatures(_docs_int(spark), k=5, num_hashes=8),
-        bands=4, num_hashes=8,
+    sigs = minhash_signatures(corpus(spark), k=5, num_hashes=8)
+    keys = {
+        r.doc_id: {(b, h) for b, h in enumerate(r.bh)}
+        for r in sigs.select(
+            "doc_id", band_hashes_col(F.col("sig"), 4, 8).alias("bh")
+        ).collect()
+    }
+    want = _pairs_sharing_a_key(keys)
+    got = [(r.doc_a, r.doc_b)
+           for r in lsh_candidate_pairs(sigs, bands=4, num_hashes=8).collect()]
+    assert len(got) == len(set(got))  # distinct, as documented
+    assert set(got) == want and want  # non-vacuous: duplicate texts pair up
+
+
+@pytest.mark.parametrize("df_cap", [None, 2])
+@pytest.mark.parametrize("corpus", [_docs_int, _docs_str],
+                         ids=["long", "string"])
+def test_ngram_pairs_equal_brute_force(spark, corpus, df_cap):
+    """ngram_jaccard_pairs == Jaccard over per-doc gram sets collected
+    from Spark, after dropping every gram whose document frequency
+    exceeds df_cap — for long and for string doc ids."""
+    from collections import Counter
+
+    from refined_spark.functions.hashing import (
+        split_tokens_col,
+        token_shingles_from_tokens_col,
     )
-    assert "FlatMapGroupsInPandas" in fast._jdf.queryExecution().executedPlan().toString() or \
-           "MapInPandas" in fast._jdf.queryExecution().executedPlan().toString()
-    got = {(r.doc_a, r.doc_b) for r in fast.collect()}
-    slow = lsh_candidate_pairs(
-        minhash_signatures(_docs_str(spark), k=5, num_hashes=8),
-        bands=4, num_hashes=8,
+    from refined_spark.functions.similarity import round6_half_up
+    from refined_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+        normalized_text_col,
     )
-    want = {(int(r.doc_a[1:]), int(r.doc_b[1:])) for r in slow.collect()}
-    assert got == want and got  # non-vacuous: the duplicate text pairs up
 
-
-def test_ngram_block_kernel_equals_jvm_fallback(spark):
-    from refined_spark.operators.dedup import ngram_jaccard_pairs
-
+    d = corpus(spark)
+    gram_sets = {
+        r.doc_id: set(r.grams)
+        for r in d.select(
+            "doc_id",
+            token_shingles_from_tokens_col(
+                split_tokens_col(normalized_text_col(F.col("text"))), 3
+            ).alias("grams"),
+        ).collect()
+    }
+    dfreq = Counter(g for gs in gram_sets.values() for g in gs)
+    kept = {
+        doc: {g for g in gs if df_cap is None or dfreq[g] <= df_cap}
+        for doc, gs in gram_sets.items()
+    }
+    want = {}
+    for a, b in _pairs_sharing_a_key(kept):
+        jacc = len(kept[a] & kept[b]) / len(kept[a] | kept[b])
+        if jacc >= 0.3:
+            want[(a, b)] = round6_half_up(jacc)
     got = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in ngram_jaccard_pairs(_docs_int(spark), n=3, threshold=0.3).collect()
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in ngram_jaccard_pairs(d, n=3, threshold=0.3,
+                                     df_cap=df_cap).collect()
     }
-    want = {
-        (int(r.doc_a[1:]), int(r.doc_b[1:]), r.jaccard)
-        for r in ngram_jaccard_pairs(_docs_str(spark), n=3, threshold=0.3).collect()
-    }
-    assert got == want and got
+    assert got == want and want
 
 
 def test_ngram_block_kernel_df_cap(spark):
