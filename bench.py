@@ -297,12 +297,8 @@ def prep_stage_inputs(corpus: str) -> str:
     mentions = pipeline.build_mentions(docs)
     cands = pem.candidate_join(mentions, load("pem"), entity_meta=load("entity_meta"))
     merged = coref.propagate_person_coref(
-        cands, load("human_qcodes"), mentions=mentions, entity_meta=load("entity_meta")
+        cands, load("human_qcodes"), entity_meta=load("entity_meta")
     )
-    # row-balanced snapshot: the coref union's branches are wildly
-    # byte-skewed per row, and AQE sizes partitions by bytes — without
-    # this, 4 unsplittable fat files hold half the rows and their scan
-    # tasks gate the scoring stage at ANY core count
     merged.repartition(96, "mention_id").write.mode("overwrite").parquet(
         f"{prep}/merged.parquet")
     # the mention-attribute table the fused scorer joins winners back to
@@ -354,10 +350,11 @@ MAX_BENCH_BUSY = float(os.environ.get("REFINED_SPARK_MAX_BENCH_BUSY", "0.15"))
 MAX_STEAL_CORES = float(os.environ.get("REFINED_SPARK_MAX_STEAL_CORES", "0.5"))
 # guest-kernel-storm gate (round 5): this VM intermittently multiplies the
 # CPU bill of IDENTICAL work 3-6x in minutes-long windows — roving across
-# stages and runs, sys-dominated, at steal ~ 0 (jobs/profile_inflation.py:
-# the same stage body measured 28 s/383 CPU-s and 63 s/893 CPU-s with 637
-# sys-CPU-s across consecutive full-profile runs; a consecutive-rep pair
-# within one run measured 75.6 s/591 sys vs 27.9 s/14.7 sys). The sys
+# stages and runs, sys-dominated, at steal ~ 0
+# (jobs/profile_inflation_result.jsonl: the same stage body measured
+# 28 s/383 CPU-s and 63 s/893 CPU-s with 637 sys-CPU-s across consecutive
+# full-profile runs; a consecutive-rep pair within one run measured
+# 75.6 s/591 sys vs 27.9 s/14.7 sys). The sys
 # explosion is the machine-readable marker: clean runs show sys <= ~7% of
 # the arm width even on UDF-heavy stages, storms 25-70%. A sample whose
 # machine-wide sys-core average exceeds this fraction of the arm width
@@ -754,7 +751,7 @@ def _amortize_lines() -> list[str]:
 
 
 INFLATION_HEADING = ("## Wide-arm CPU inflation: root cause"
-                     " (jobs/profile_inflation.py)")
+                     " (jobs/profile_inflation_result.jsonl)")
 
 
 def _inflation_lines() -> list[str]:

@@ -1,6 +1,6 @@
 """Memory-bandwidth ceiling probe (Spark-free).
 
-The e2e work-inflation question (jobs/profile_inflation.py) needs a
+The e2e work-inflation question (jobs/profile_inflation_result.jsonl) needs a
 hardware baseline: if this box's aggregate DRAM bandwidth stops scaling
 between 4 and 16 concurrent streams, then CPU-seconds of any
 memory-bound stage inflate at 16 cores REGARDLESS of the engine — the

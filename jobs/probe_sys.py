@@ -1,6 +1,6 @@
 """Attribute the wide-arm SYS-time explosion to a kernel mechanism.
 
-profile_inflation.py showed the candidates stage burning 16x more sys
+profile_inflation_result.jsonl showed the candidates stage burning 16x more sys
 CPU at 16 cores than at 4 (133 vs 8 CPU-s) on the identical input. This
 probe runs ONE stage body at a pinned width and deltas the kernel-side
 counters that distinguish the candidate mechanisms:

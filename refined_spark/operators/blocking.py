@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from refined_spark.functions.hashing import banded_rows, char_shingles_col
 
 # persisted intermediates of the two-channel fallback join, released via
-# release_cache() — same contract as coref/pipeline (the storeless analog
+# release_cache() — same contract as pipeline (the storeless analog
 # of the snapshot a StageStore run would commit between the channels).
 # Callers that need per-run release (e.g. the pipeline's eager release
 # after a candidates snapshot commit) pass their own cache_registry to

@@ -76,6 +76,39 @@ def mention_window_text(
     )
 
 
+def person_coref(
+    ms: list[dict], human_qcodes: set[str]
+) -> dict[str, dict[str, float]]:
+    """J4 on one document, backward (order-free) two-pass. ms: the doc's
+    mentions, each {mention_id, block_key, cands: [(qcode, prior)]}.
+    Returns mention_id -> {qcode: prior}, the direct candidates merged with
+    the donations, best prior per qcode ({} for a dictionary miss that got
+    none)."""
+    # donors: token -> {qcode: best capped prior}
+    donations: dict[str, dict[str, float]] = defaultdict(dict)
+    for m in ms:
+        toks = m["block_key"].split()
+        if len(toks) < 2:
+            continue
+        for q, p in m["cands"]:
+            if q in human_qcodes and p > COREF_FLOOR:
+                capped = min(p, COREF_CAP)
+                for t in toks:
+                    if capped > donations[t].get(q, -1.0):
+                        donations[t][q] = capped
+    out: dict[str, dict[str, float]] = {}
+    for m in ms:
+        merged: dict[str, float] = {}
+        for q, p in m["cands"]:
+            merged[q] = max(merged.get(q, -1.0), p)
+        toks = m["block_key"].split()
+        if len(toks) == 1 and toks[0] in donations:
+            for q, p in donations[toks[0]].items():
+                merged[q] = max(merged.get(q, -1.0), p)
+        out[m["mention_id"]] = merged
+    return out
+
+
 def resolve_mentions(
     mentions: list[dict],
     pem: dict[str, list[tuple[str, float]]],
@@ -99,29 +132,11 @@ def resolve_mentions(
 
     out: dict[str, str | None] = {}
     for doc_id, ms in by_doc.items():
-        # --- coref pass: collect donors (order-free / backward semantics)
-        donations: dict[str, dict[str, float]] = defaultdict(dict)  # token -> {qcode: prior}
-        for m in ms:
-            toks = m["block_key"].split()
-            if len(toks) < 2:
-                continue
-            for q, p in m["cands"]:
-                if q in human_qcodes and p > COREF_FLOOR:
-                    capped = min(p, COREF_CAP)
-                    for t in toks:
-                        if capped > donations[t].get(q, -1.0):
-                            donations[t][q] = capped
-        # --- merge + score
+        cands = person_coref(ms, human_qcodes)
         spans_d = doc_spans.get(doc_id, [])
         for m in ms:
             mention_emb = hash_embed(mention_window_text(spans_d, m["offset"]))
-            merged: dict[str, float] = {}
-            for q, p in m["cands"]:
-                merged[q] = max(merged.get(q, -1.0), p)
-            toks = m["block_key"].split()
-            if len(toks) == 1 and toks[0] in donations:
-                for q, p in donations[toks[0]].items():
-                    merged[q] = max(merged.get(q, -1.0), p)
+            merged = cands[m["mention_id"]]
             best_q, best_score = None, None
             for q, p in merged.items():
                 jw = jaro_winkler_py(m["block_key"], norm_label.get(q, ""))

@@ -29,22 +29,19 @@ from refined_spark.plans.snapshots import StageStore
 STAGES = ["mentions", "candidates", "coref", "resolved", "clusters"]
 
 # storeless run() persists the mentions frame (see below); release after the
-# output is materialized — same contract as coref.release_cache. Long-lived
-# sessions (streaming foreachBatch, notebooks) call this between runs;
-# short-lived ones get it back at session teardown. It releases per-run
-# frames only: the dictionary index (pem's persisted dictionary parts and
-# entity-matrix broadcast) outlives it, so every run and micro-batch over
-# one dictionary shares those parts.
+# output is materialized. Long-lived sessions (streaming foreachBatch,
+# notebooks) call this between runs; short-lived ones get it back at session
+# teardown. It releases per-run frames only: the dictionary index (pem's
+# persisted dictionary parts and entity-matrix broadcast) outlives it, so
+# every run and micro-batch over one dictionary shares those parts.
 _PERSISTED: list = []
 
 
 def release_cache() -> None:
     from refined_spark.operators import blocking as _blocking
-    from refined_spark.operators import coref as _coref
 
     while _PERSISTED:
         _PERSISTED.pop().unpersist()
-    _coref.release_cache()
     _blocking.release_cache()
 
 
@@ -98,12 +95,12 @@ def run(
 
     mentions = stage("mentions", lambda: build_mentions(documents), "block_key")
     if store is None:
-        # three consumers read this frame (the candidate join, the coref
-        # receiver set, and the fused scorer's winner-attribute rejoin);
-        # without a snapshot each would recompute the explode + normalize
-        # Python UDF over every mention. The StageStore path gets this for
-        # free from the committed parquet — persist() is the storeless
-        # equivalent (MEMORY_AND_DISK default: spills, never recomputes).
+        # two consumers read this frame (the candidate join and the fused
+        # scorer's winner-attribute rejoin); without a snapshot each would
+        # recompute the explode + normalize Python UDF over every mention.
+        # The StageStore path gets this for free from the committed parquet
+        # — persist() is the storeless equivalent (MEMORY_AND_DISK default:
+        # spills, never recomputes).
         mentions = mentions.persist()
         _PERSISTED.append(mentions)
 
@@ -148,23 +145,14 @@ def run(
             lambda: pem.candidate_join(mentions, pem_df, entity_meta=entity_meta),
         )
 
-    # the coref output is a 3-way union whose branches AQE sizes by BYTES;
-    # the regrouped branch compresses ~50x better than the pass-through
-    # branches, so byte-balanced partitions are massively ROW-skewed — and
-    # parquet snapshots of it become unsplittable fat files that gate every
-    # downstream scan. Committing with an explicit mention_id repartition
-    # restores row balance (north rule: explicit repartitioning).
+    # coref is doc-local: one exchange on doc_id into as many partitions as
+    # a commit writes, so its snapshot is already row-balanced
     merged = stage(
         "coref",
         lambda: coref.propagate_person_coref(
-            candidates, human_qcodes, mentions=mentions, entity_meta=entity_meta
+            candidates, human_qcodes, entity_meta=entity_meta
         ),
-        repartition_by="mention_id",
     )
-    if store is not None:
-        # the coref snapshot is committed (materialized) — drop the
-        # intermediate `donated` cache so long-lived sessions don't leak it
-        coref.release_cache()
 
     # scoring path selection (size-aware, like the broadcast policy): the
     # fused cogrouped kernel needs the entity matrix on the driver — legal

@@ -157,8 +157,7 @@ def test_fused_scoring_matches_rowjoin_path(spark, fixture_paths, pass_mentions)
     mentions = pipeline.build_mentions(docs)
     cands = pem.candidate_join(mentions, load("pem"), entity_meta=load("entity_meta"))
     merged = coref.propagate_person_coref(
-        cands, load("human_qcodes"), mentions=mentions,
-        entity_meta=load("entity_meta"),
+        cands, load("human_qcodes"), entity_meta=load("entity_meta")
     )
     if pass_mentions:  # production shape: per-mention windowed ctx
         ctx = scoring.mention_window_embeddings(docs)
