@@ -4,16 +4,19 @@ Default run: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}.
 
---scaling: runs the ER pipeline (the north-rule workload, on the
-deterministic interleaved-document corpus) at local[8] and local[32] on the
-SAME input and writes throughput at both plus scaling efficiency to BENCH.md
-— the sandbox stand-in for the N vs 4N executor criterion.
+--scaling: the north-rule N -> 4N measurement on the scoring and clustering
+stages. 4N is the largest multiple of 4 that fits the CPU affinity mask and
+N = 4N/4 (a 4-cpu host runs 1 vs 4 cores); under 4 cpus it exits with an
+error. One StageStore-backed pipeline run over the scaling corpus commits
+the stage inputs, each arm runs in its own JVM pinned to its cores, and the
+result is ONE JSON line with both efficiencies; no file is written.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -35,6 +38,11 @@ ER_ENTITIES = int(os.environ.get("REFINED_SPARK_BENCH_ENTITIES", "1500"))
 # latency — the quantity the N->4N criterion is about
 SCALING_DOCS = int(os.environ.get("REFINED_SPARK_SCALING_DOCS", "360000"))
 SCALING_ENTITIES = int(os.environ.get("REFINED_SPARK_SCALING_ENTITIES", "8000"))
+# measured runs per scaling arm, after two warm-ups; the arm reports the min
+SCALING_RUNS = 3
+# measured runs wait (up to ~2.5 min) for the machine's instantaneous busy
+# fraction to drop below this before starting (see _busy_frac)
+MAX_BENCH_BUSY = float(os.environ.get("REFINED_SPARK_MAX_BENCH_BUSY", "0.15"))
 
 HEADLINE = [
     "pricing_summary",
@@ -86,32 +94,32 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _unpersist_all(spark) -> None:
-    """Free localCheckpoint/cache RDDs between runs — they otherwise
-    accumulate in the JVM and each successive run gets slower. The explicit
-    System.gc() matters as much as the unpersist: shuffle files (on tmpfs
-    here, so they hold RAM) and checkpoint blocks are only deleted when the
-    ContextCleaner processes weak references, i.e. after a driver GC — left
-    to its own devices the JVM can run several measured runs before one
-    happens, and samples within an arm degrade monotonically (measured
-    clustering-32: [129, 152, 258, 366] without the GC vs [101, 108] flat
-    with it)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rdd in jmap.values():
-        rdd.unpersist()
-    spark.sparkContext._jvm.System.gc()
+def _busy_frac(interval: float = 1.0) -> float:
+    """Machine-wide non-idle CPU fraction over `interval` seconds, from
+    /proc/stat. The bench is idle while it samples this, so anything busy
+    is another tenant; loadavg(1m) would be the wrong gauge, because the
+    bench's own just-finished run pollutes it for minutes."""
+    def snap():
+        with open("/proc/stat") as f:
+            parts = f.readline().split()[1:]
+        vals = [int(x) for x in parts]
+        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)  # idle + iowait
+        return idle, sum(vals)
+    i0, t0 = snap()
+    time.sleep(interval)
+    i1, t1 = snap()
+    dt = t1 - t0
+    return 1.0 - (i1 - i0) / dt if dt else 0.0
 
 
-def _cpu_steal_seconds() -> float:
-    """Cumulative hypervisor steal time (machine-wide, seconds). The delta
-    across a measured run is a machine-readable contamination gauge: steal
-    means the hypervisor ran OTHER tenants on our vCPUs mid-run — the one
-    noise source no amount of process hygiene on this guest can avoid
-    (measured: a clustering run with 5.1 stolen cores took 279 s where the
-    quiet-host run takes 64 s)."""
-    with open("/proc/stat") as f:
-        v = f.readline().split()[1:]
-    return int(v[7]) / os.sysconf("SC_CLK_TCK") if len(v) > 7 else 0.0
+def _wait_quiet() -> None:
+    """The busy gate in front of every measured run: wait, within a bounded
+    budget, for the machine busy fraction to drop to MAX_BENCH_BUSY rather
+    than publish a sample taken during another tenant's burst."""
+    for _ in range(30):
+        if _busy_frac() <= MAX_BENCH_BUSY:
+            return
+        time.sleep(4)
 
 
 def run_er_pipeline(spark, corpus_dir: str, **pipeline_kwargs) -> tuple[float, int]:
@@ -159,18 +167,13 @@ def main_bench() -> None:
     # this VM), pass 2 is the warm sample — and the min also discards the
     # multi-second host-noise bursts this shared VM throws at random (a
     # single contaminated pass inflated one measured query 6->97s). Each
-    # measurement additionally waits for the instantaneous machine busy
-    # fraction to drop (we are idle between queries, so busy == other
-    # tenants), same gate as the scaling runs.
+    # measurement additionally waits for the busy gate.
     timings: dict[str, float] = {}
     all_samples: dict[str, list[float]] = {}
     for _pass in range(2):
         for name in HEADLINE:
             fn = Q.QUERIES[name]
-            for _ in range(30):
-                if _busy_frac() <= MAX_BENCH_BUSY:
-                    break
-                time.sleep(4)
+            _wait_quiet()
             t0 = time.time()
             materialize(fn(spark, SF_DIR))
             dt = round(time.time() - t0, 3)
@@ -192,10 +195,7 @@ def main_bench() -> None:
     # improves the min's chance of catching one quiet window
     samples = []
     for _ in range(4):
-        for _ in range(30):
-            if _busy_frac() <= MAX_BENCH_BUSY:
-                break
-            time.sleep(4)
+        _wait_quiet()
         samples.append(run_er_pipeline(spark, corpus))
     er_sec, n_docs = min(samples)
     timings["er_pipeline"] = round(er_sec, 3)
@@ -204,17 +204,14 @@ def main_bench() -> None:
     # MinHash-LSH blocking fallback are the paths a skewed / exact-miss
     # 100 TB corpus takes — benched every round so a regression shows on
     # the scoreboard, but NOT added to the headline total (its definition
-    # — 25 queries + default er_pipeline — stays comparable to rounds 1-3)
+    # — 24 queries + default er_pipeline — stays comparable to rounds 1-3)
     variants: dict[str, float] = {}
     for vname, kw in (("er_pipeline_salted", {"salted": True}),
                       ("er_pipeline_lsh", {"lsh_blocking": True})):
         run_er_pipeline(spark, corpus, **kw)  # warm-up: these plans differ
         vs = []
         for _ in range(2):
-            for _ in range(30):
-                if _busy_frac() <= MAX_BENCH_BUSY:
-                    break
-                time.sleep(4)
+            _wait_quiet()
             vs.append(run_er_pipeline(spark, corpus, **kw)[0])
         variants[vname] = round(min(vs), 3)
 
@@ -237,10 +234,7 @@ def main_bench() -> None:
         run_er_pipeline(spark, corpus, store=store)  # full run, all commits
         for st in ("coref", "scored", "resolved", "clusters"):
             store.reset(st)  # = killed right after the candidates commit
-        for _ in range(30):
-            if _busy_frac() <= MAX_BENCH_BUSY:
-                break
-            time.sleep(4)
+        _wait_quiet()
         variants["er_pipeline_resume"] = round(
             run_er_pipeline(spark, corpus, store=store)[0], 3)
     finally:
@@ -267,284 +261,88 @@ def main_bench() -> None:
     spark.stop()
 
 
-CC_AMPLIFY = int(os.environ.get("REFINED_SPARK_CC_AMPLIFY", "16"))
+def scaling_arms(cpus: int) -> tuple[int, int]:
+    """(N, 4N) for a host with `cpus` usable cpus: 4N is the largest
+    multiple of 4 that fits, so 4 -> (1, 4), 6 -> (1, 4), 32 -> (8, 32)."""
+    wide = cpus // 4 * 4
+    if wide < 4:
+        raise ValueError(f"the N -> 4N scaling arms need at least 4 cpus; "
+                         f"the affinity mask holds {cpus}")
+    return wide // 4, wide
 
 
-def prep_stage_inputs(corpus: str) -> str:
-    """Materialize the stage inputs once (untimed, full parallelism):
-      merged.parquet       — post-coref candidates with the jw feature
-      resolved_amp.parquet — resolved mentions sharded CC_AMPLIFY ways
-                             (mention_id and qcode suffixed per shard: an
-                             exact stand-in for a CC_AMPLIFY x bigger corpus
-                             — same structure, independent shards), written
-                             partitionBy(shard)."""
-    from pyspark.sql import functions as F
-
-    from refined_spark.operators import coref, pem, scoring, spans
-    from refined_spark.plans import pipeline
-    from refined_spark.session import get_spark
-
-    prep = os.path.join(corpus, f"_stage_prep_a{CC_AMPLIFY}_v4")
-    marker = os.path.join(prep, "_DONE")
-    if os.path.exists(marker):
-        return prep
-
-    spark = get_spark(app_name="scaling_prep", master="local[32]",
-                      shuffle_partitions=32, scale_profile=True)
-    spark.sparkContext.setLogLevel("ERROR")
-    load = lambda k: spark.read.parquet(f"{corpus}/{k}.parquet")
-    docs = load("documents").repartition(spark.sparkContext.defaultParallelism)
-    mentions = pipeline.build_mentions(docs)
-    cands = pem.candidate_join(mentions, load("pem"), entity_meta=load("entity_meta"))
-    merged = coref.propagate_person_coref(
-        cands, load("human_qcodes"), entity_meta=load("entity_meta")
-    )
-    merged.repartition(96, "mention_id").write.mode("overwrite").parquet(
-        f"{prep}/merged.parquet")
-    # the mention-attribute table the fused scorer joins winners back to
-    # (the pipeline's materialized mentions stage plays this role there)
-    mentions.select("mention_id", "doc_id", "block_key", "offset").repartition(
-        32, "mention_id"
-    ).write.mode("overwrite").parquet(f"{prep}/mentions.parquet")
-
-    merged_back = spark.read.parquet(f"{prep}/merged.parquet")
-    ctx = scoring.mention_window_embeddings(docs)
-    resolved = scoring.resolve(
-        scoring.score_candidates(merged_back, load("entity_meta"),
-                                 load("entity_embeddings"), ctx)
-    )
-    shard = F.explode(F.sequence(F.lit(0), F.lit(CC_AMPLIFY - 1)))
-    amp = (
-        resolved.withColumn("shard", shard)
-        .select(
-            F.concat_ws("#", "mention_id", "shard").alias("mention_id"),
-            # NIL mentions stay NIL: plain concat propagates the null qcode
-            F.concat(F.col("qcode"), F.lit("#"), F.col("shard")).alias("qcode"),
-            "shard",
-        )
-    )
-    # ~6 row-balanced files per shard directory: repartition on
-    # (shard, bucket) so each partition holds one shard's rows only and
-    # partitionBy(shard) emits ~one file per partition, not 96 x CC_AMPLIFY
-    # fragments
-    amp.repartition(
-        96, "shard", F.pmod(F.xxhash64("mention_id"), F.lit(6))
-    ).write.mode("overwrite").partitionBy("shard").parquet(
-        f"{prep}/resolved_amp.parquet")
-    with open(marker, "w") as f:
-        f.write("ok")
-    spark.stop()
-    return prep
-
-
-BENCH_RUNS = int(os.environ.get("REFINED_SPARK_BENCH_RUNS", "5"))
-# measured runs wait (up to 5 min) for the machine's instantaneous busy
-# fraction below this before starting. loadavg(1m) is the WRONG gate here:
-# our own just-finished warm-up pollutes it for minutes; /proc/stat over a
-# 1 s window sees only what is running RIGHT NOW (we are idle between runs,
-# so anything busy is host noise / another tenant).
-MAX_BENCH_BUSY = float(os.environ.get("REFINED_SPARK_MAX_BENCH_BUSY", "0.15"))
-# a measured run that lost more vCPUs than this to hypervisor steal is
-# requeued (see stage_run) — 0.5 cores of steal on a 32-core arm is a ~10%+
-# wall-clock bias in practice because steal bursts hit the critical path
-MAX_STEAL_CORES = float(os.environ.get("REFINED_SPARK_MAX_STEAL_CORES", "0.5"))
-# guest-kernel-storm gate (round 5): this VM intermittently multiplies the
-# CPU bill of IDENTICAL work 3-6x in minutes-long windows — roving across
-# stages and runs, sys-dominated, at steal ~ 0
-# (jobs/profile_inflation_result.jsonl: the same stage body measured
-# 28 s/383 CPU-s and 63 s/893 CPU-s with 637 sys-CPU-s across consecutive
-# full-profile runs; a consecutive-rep pair within one run measured
-# 75.6 s/591 sys vs 27.9 s/14.7 sys). The sys
-# explosion is the machine-readable marker: clean runs show sys <= ~7% of
-# the arm width even on UDF-heavy stages, storms 25-70%. A sample whose
-# machine-wide sys-core average exceeds this fraction of the arm width
-# (plus a 0.5-core floor for tmpfs-shuffle background) is requeued exactly
-# like a stolen sample — it measures the host, not the job.
-MAX_SYS_FRAC = float(os.environ.get("REFINED_SPARK_MAX_SYS_FRAC", "0.20"))
-
-
-def _busy_frac(interval: float = 1.0) -> float:
-    """Machine-wide non-idle CPU fraction over `interval` seconds."""
-    def snap():
-        with open("/proc/stat") as f:
-            parts = f.readline().split()[1:]
-        vals = [int(x) for x in parts]
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)  # idle + iowait
-        return idle, sum(vals)
-    i0, t0 = snap()
-    time.sleep(interval)
-    i1, t1 = snap()
-    dt = t1 - t0
-    return 1.0 - (i1 - i0) / dt if dt else 0.0
-
-
-def _cpu_busy_sys_seconds() -> tuple[float, float]:
-    """Cumulative machine-wide (busy, sys) CPU seconds from /proc/stat.
-    The delta across a measured run, divided by wall, gives busy-cores and
-    sys-cores DURING the run — the two probes that separate the three
-    non-scaling stories a wide arm can tell: busy << cores with low sys =
-    stage tails / barriers (serial fraction); high sys = guest-kernel storm
-    (box artifact, BENCH.md diagnosis #2); busy ~= cores with low sys =
-    the work itself grew (real algorithmic cost)."""
-    with open("/proc/stat") as f:
-        v = [int(x) for x in f.readline().split()[1:]]
-    tck = os.sysconf("SC_CLK_TCK")
-    idle = v[3] + (v[4] if len(v) > 4 else 0)
-    return (sum(v) - idle) / tck, v[2] / tck
-
-
-def stage_run(corpus: str, prep: str, stage: str, cores: int,
-              runs: int = BENCH_RUNS) -> None:
-    """Subprocess body: one JVM pinned to `cores` CPUs (taskset in the
-    parent), TWO warm-ups + `runs` measured runs, prints one JSON line with
-    the MIN (this sandbox VM has multi-second host-level noise bursts; min
-    is the robust estimator of the true cost, and all samples are reported).
+def stage_run(corpus: str, store_root: str, stage: str, cores: int) -> None:
+    """Subprocess body: pin this process (and so the JVM it launches) to
+    the first `cores` cpus of its affinity mask and run one scaling stage.
 
     stages:
-      scoring           — context embedding (Arrow UDF) + candidate scoring
-                          (prior + jw + cosine) + argmax resolution, over
-                          the materialized post-coref candidates
-      clustering        — the engine's clustering stage
-                          (clustering.cluster_assignments: one group-by on
-                          the winner entity, joined back) over the
-                          shard-amplified resolved mentions
-      clustering_global — the same plan with the shard column pruned at
-                          the scan (kept so the scaling JSON and BENCH.md
-                          keep their rows)
-      e2e               — the full pipeline (context number, 3 measured
-                          runs)
-    """
-    from refined_spark.operators import clustering, scoring, spans
+      prep       — one StageStore-backed pipeline.run over the corpus; its
+                   committed mentions, coref and resolved snapshots are the
+                   inputs of the two measured stages
+      scoring    — the fused scoring+resolve kernel over the coref snapshot
+                   (docs/s: the stage embeds every doc once)
+      clustering — clustering.cluster_assignments over the resolved
+                   snapshot (mentions/s)
+
+    Every arm ships the same job config (a real cluster job ships one
+    config and runs on N or 4N executors): the scale profile with shuffle
+    partitions at 3x the wide arm. A measured stage runs two warm-ups, then
+    SCALING_RUNS busy-gated runs, and prints one JSON line with the min."""
+    from refined_spark.operators import clustering, scoring
+    from refined_spark.plans import pipeline
+    from refined_spark.plans.snapshots import StageStore
     from refined_spark.session import get_spark
 
-    # IDENTICAL job config at both parallelism levels (a real cluster job
-    # ships one config and runs on N or 4N executors): shuffle partitions
-    # fixed at 3x the larger size; AQE's parallelism-first coalescing keeps
-    # at least defaultParallelism partitions at either scale
-    spark = get_spark(
-        app_name=f"scaling_{stage}_{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=96,
-        scale_profile=True,
-    )
+    mask = sorted(os.sched_getaffinity(0))
+    _, wide = scaling_arms(len(mask))
+    os.sched_setaffinity(0, mask[:cores])
+    if len(os.sched_getaffinity(0)) != cores:
+        raise RuntimeError(f"could not pin the {stage} arm to {cores} cpus")
+    spark = get_spark(app_name=f"scaling_{stage}_{cores}",
+                      master=f"local[{cores}]", shuffle_partitions=3 * wide,
+                      scale_profile=True)
     spark.sparkContext.setLogLevel("ERROR")
     load = lambda k: spark.read.parquet(f"{corpus}/{k}.parquet")
+    store = StageStore(store_root)
 
+    if stage == "prep":
+        pipeline.run(spark, load("documents"), load("pem"), load("entity_meta"),
+                     load("entity_embeddings"), load("human_qcodes"),
+                     store=store)
+        spark.stop()
+        return
     if stage == "scoring":
-        merged = spark.read.parquet(f"{prep}/merged.parquet")
-        mention_attrs = spark.read.parquet(f"{prep}/mentions.parquet")
         docs = load("documents")
-        emb = load("entity_embeddings")
-        n_items = docs.count()  # docs/sec: the stage embeds every doc once
-
-        # the engine's default path at dictionary scale (pipeline.run
-        # auto-selects it): fused cogrouped scoring+resolve — skinny
-        # Arrow rows, ctx shipped once per doc, argmax in-kernel.
-        # The plan is built ONCE, outside the timed body: plan construction
-        # collects the entity matrix to the driver and runs Catalyst
-        # analysis — per-CORPUS costs a 100 TB job pays once, which a
-        # per-run charge would bill N times and which dominates exactly the
-        # fast arms the efficiency ratio divides by (measured ~8 s of
-        # serial per run vs a 24 s 16-core run). Every timed body() is a
-        # full re-execution of the distributed job (Spark caches nothing
-        # between noop writes); e2e below charges plan construction
-        # end-to-end, where it honestly belongs.
-        ctx = scoring.mention_window_embeddings(docs)
-        fused = scoring.score_resolve_fused(
-            merged, emb, ctx, mentions=mention_attrs)
-        assert fused is not None, "bench embeddings exceed fused budget"
-
-        def body():
-            materialize(fused)
-
+        n_items = docs.count()
+        # the plan is built once, outside the timed body: building it
+        # collects the entity matrix to the driver, a per-corpus cost that
+        # a per-run charge would bill to the fast arm the ratio divides by
+        job = scoring.score_resolve_fused(
+            store.read(spark, "coref"), load("entity_embeddings"),
+            scoring.mention_window_embeddings(docs),
+            mentions=store.read(spark, "mentions"))
+        if job is None:
+            raise RuntimeError("the scaling embeddings exceed the fused budget")
     elif stage == "clustering":
-        resolved = spark.read.parquet(f"{prep}/resolved_amp.parquet")
-        n_items = resolved.count()  # mentions/sec
-
-        def body():
-            materialize(clustering.cluster_assignments(resolved.drop("shard")))
-
-    elif stage == "clustering_global":
-        resolved = spark.read.parquet(
-            f"{prep}/resolved_amp.parquet").drop("shard")
-        n_items = resolved.count()  # mentions/sec
-
-        def body():
-            materialize(clustering.cluster_assignments(resolved))
-
-    elif stage == "e2e":
-        n_items = spark.read.parquet(f"{corpus}/documents.parquet").count()
-        runs = min(runs, 3)  # e2e runs are ~minutes each
-
-        def body():
-            run_er_pipeline(spark, corpus)
-
+        n_items = store.metrics("resolved")["rows"]
+        job = clustering.cluster_assignments(store.read(spark, "resolved"))
     else:
         raise ValueError(stage)
 
-    # two warm-ups: the first run pays whole-stage-codegen (Janino) compile,
-    # the second finishes JVM C2 tiering — fused-plan steady state arrives
-    # on run 3 (measured: 34s -> 21s -> 6.2s -> 6.4s -> 6.3s)
-    for _ in range(2 if stage != "e2e" else 1):
-        body()
-        _unpersist_all(spark)
     secs = []
-    loads = []
-    steals = []
-    busy_list = []
-    sys_list = []
-    attempts = 0
-    # generous retry budget: the round-3 clustering-4 arm exhausted 2n+2
-    # attempts under persistent ~1-vCPU steal and kept ONE clean-ish sample
-    # — the judge's top finding; the gate needs >=2 steal-clean samples
-    max_attempts = 4 * runs + 4
-    while len(secs) < runs and attempts < max_attempts:
-        attempts += 1
-        # noise gate: wait for the instantaneous machine busy fraction to
-        # drop (we are idle here, so busy == host noise) rather than
-        # publish a poisoned sample — the round-2 lesson, where single
-        # contaminated runs flipped the gate verdict run-to-run
-        for _ in range(60):
-            if _busy_frac() <= MAX_BENCH_BUSY:
-                break
-            time.sleep(4)
-        loads.append(round(os.getloadavg()[0], 2))
-        st0 = _cpu_steal_seconds()
-        bs0 = _cpu_busy_sys_seconds()
+    for i in range(2 + SCALING_RUNS):
+        if i >= 2:
+            _wait_quiet()
         t0 = time.time()
-        body()
-        dt = time.time() - t0
-        stolen_cores = (_cpu_steal_seconds() - st0) / dt
-        bs1 = _cpu_busy_sys_seconds()
-        busy_list.append(round((bs1[0] - bs0[0]) / dt, 2))
-        sys_list.append(round((bs1[1] - bs0[1]) / dt, 2))
-        steals.append(round(stolen_cores, 2))
-        _unpersist_all(spark)
-        # a run that lost >MAX_STEAL_CORES vCPUs to the hypervisor is
-        # contaminated BY CONSTRUCTION — requeue it (bounded retries; if
-        # the host stays loud, the sample is kept and the steal column in
-        # BENCH.md shows exactly how loud). Same treatment for samples
-        # caught inside a guest-kernel sys storm (see MAX_SYS_FRAC): both
-        # markers measure the box, not the job, and both are published
-        # per-sample so the gating is auditable.
-        if attempts < max_attempts and (
-            stolen_cores > MAX_STEAL_CORES
-            or sys_list[-1] > MAX_SYS_FRAC * cores + 0.5
-        ):
-            continue
-        secs.append((dt, busy_list[-1], sys_list[-1]))
-    best, best_busy, best_sys = min(secs)
+        materialize(job)
+        if i >= 2:
+            secs.append(time.time() - t0)
+        # shuffle files (on tmpfs) are only deleted once a driver GC lets
+        # the ContextCleaner see them; without it samples degrade run by run
+        spark.sparkContext._jvm.System.gc()
+    best = min(secs)
     print(json.dumps({"stage": stage, "cores": cores, "sec": round(best, 2),
-                      "all_secs": [round(s, 2) for s, _, _ in sorted(secs)],
-                      "loadavg_at_start": loads,
-                      "steal_cores": steals,
-                      "busy_cores": busy_list,
-                      "sys_cores": sys_list,
-                      # CPU accounting of the MIN-wall sample (paired, not
-                      # positional): wall efficiency can hide CPU inflation
-                      # — these columns expose it per arm (round-4 ask #3)
-                      "best_busy_cores": best_busy,
-                      "best_sys_cores": best_sys,
+                      "all_secs": [round(s, 2) for s in sorted(secs)],
                       "items_per_sec": round(n_items / best, 1),
                       "n_items": n_items}))
     spark.stop()
@@ -552,650 +350,61 @@ def stage_run(corpus: str, prep: str, stage: str, cores: int,
 
 def main_scaling() -> None:
     """The north-rule criterion: scaling efficiency >= 0.8 between N and 4N
-    executors ON THE CLUSTERING AND SCORING STAGES. No real cluster exists
-    in this sandbox, so each parallelism level runs in its own JVM pinned to
-    8 or 32 cores with taskset (N and 4N); same job, same input, median of
-    3 runs after a warm-up. Results -> BENCH.md."""
-    import subprocess
+    executors on the clustering and scoring stages. No cluster exists here,
+    so each arm is its own JVM pinned to N or 4N cores of this host, on the
+    same input with the same job config."""
+    import shutil
+    import tempfile
+
+    cpus = len(os.sched_getaffinity(0))
+    try:
+        arms = scaling_arms(cpus)
+    except ValueError as e:
+        sys.exit(f"bench.py --scaling: {e}")
 
     corpus = ensure_er_corpus(SCALING_DOCS, SCALING_ENTITIES)
-    # prep runs in its own subprocess: a SparkSession created in THIS
-    # process would leave its JVM alive (spark.stop() keeps the py4j
-    # gateway) burning CPU next to every measurement that follows
-    prep = os.path.join(corpus, f"_stage_prep_a{CC_AMPLIFY}_v4")
-    if not os.path.exists(os.path.join(prep, "_DONE")):
-        import subprocess as _sp
+    store_root = tempfile.mkdtemp(prefix="scaling_store_")
 
-        _sp.run([sys.executable, os.path.abspath(__file__), "--prep-run", corpus],
-                check=True, capture_output=True, text=True)
-    def one_arm(stage: str, cores: int, runs: int) -> dict:
-        cmd = [
-            "taskset", "-c", f"0-{cores - 1}",
-            sys.executable, os.path.abspath(__file__),
-            "--stage-run", corpus, prep, stage, str(cores), str(runs),
-        ]
-        out = subprocess.run(cmd, capture_output=True, text=True, check=True)
-        line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-        return json.loads(line)
+    def child(stage: str, cores: int) -> str:
+        # every Spark session runs in a child process: a session in THIS
+        # process would keep its JVM alive next to every later measurement
+        return subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--stage-run", corpus,
+             store_root, stage, str(cores)],
+            stdout=subprocess.PIPE, text=True, check=True).stdout
 
-    # Arm plan. The gated stages (scoring, clustering) are measured at
-    # N=4 -> 4N=16 cores; e2e at 8 -> 32 for context. Why N=4: the north
-    # rule scales EXECUTORS (separate machines — each brings its own memory
-    # bus, kernel, GC threads and page cache); this sandbox can only scale
-    # CORES of one shared JVM on one noisy guest. Measured on this box
-    # (BENCH.md diagnosis below): the stage jobs saturate at ~20-21 busy
-    # cores (driver barriers + stage tails cap parallelism), so a 32-core
-    # arm structurally idles a third of its cores — an artifact a 4N-executor
-    # cluster does not have — and random guest-kernel storms (14+ cores of
-    # sys time) plus hypervisor steal (5+ cores) hit wide arms hardest. At
-    # 4 -> 16 both arms sit below the saturation point, so the pair
-    # measures the JOB's scaling, not the box's. The 8 -> 32 pair for the
-    # same stages is reported alongside (one pass each) for transparency.
-    results: dict[tuple[str, int], dict] = {}
-    GATE_PAIR = (int(os.environ.get("REFINED_SPARK_SCALING_N", "4")),
-                 4 * int(os.environ.get("REFINED_SPARK_SCALING_N", "4")))
-    WIDE_PAIR = (8, 32)
-    arm_runs = max(int(os.environ.get("REFINED_SPARK_SCALING_RUNS", "3")), 2)
-    plan: list[tuple[str, int, int]] = []
-    # gate stages first (scoring + clustering), then e2e at the same pair,
-    # then the global clustering context rows; the 8 -> 32
-    # wide pair (round-3 diagnosis material) re-runs only on request
-    for stage in ("scoring", "clustering"):
-        for cores in GATE_PAIR:
-            plan.append((stage, cores, arm_runs))
-    for cores in GATE_PAIR:
-        plan.append(("e2e", cores, arm_runs))
-    for stage in ("clustering_global",):
-        for cores in GATE_PAIR:
-            plan.append((stage, cores, arm_runs))
-    if os.environ.get("REFINED_SPARK_SCALING_WIDE", "0") == "1":
-        for cores in WIDE_PAIR:
-            plan.append(("e2e", cores, arm_runs))
-        for stage in ("scoring", "clustering"):
-            for cores in WIDE_PAIR:
-                plan.append((stage, cores, arm_runs))
+    try:
+        child("prep", arms[1])
+        results = {
+            stage: [json.loads(child(stage, cores).strip().splitlines()[-1])
+                    for cores in arms]
+            for stage in ("scoring", "clustering")
+        }
+    finally:
+        shutil.rmtree(store_root, ignore_errors=True)
 
-    def eff(stage: str, pair: tuple[int, int]) -> float:
-        lo, hi = pair
-        return (results[(stage, hi)]["items_per_sec"]
-                / results[(stage, lo)]["items_per_sec"]) / 4.0
+    def eff(stage: str) -> float:
+        lo, hi = results[stage]
+        return round(hi["items_per_sec"] / lo["items_per_sec"] / 4.0, 3)
 
-    def cpu_cols(r: dict) -> str:
-        """busy/sys CPU-seconds of the min-wall sample — wall efficiency
-        can hide CPU inflation (round-4 finding); these make it visible."""
-        if "best_busy_cores" not in r:
-            return " | "
-        return (f"{r['best_busy_cores'] * r['sec']:,.0f} | "
-                f"{r['best_sys_cores'] * r['sec']:,.0f}")
-
-    def row(stage: str, unit: str, pair: tuple[int, int]) -> str:
-        lo, hi = pair
-        rl, rh = results.get((stage, lo)), results.get((stage, hi))
-        if rl is None or rh is None:
-            return (f"| {stage} | (pair incomplete) | {lo} | | | | | "
-                    f"{hi} | | | | | {unit} | |")
-        return (
-            f"| {stage} | {rl['n_items']:,} | {lo} | {rl['sec']:.2f} | "
-            f"{rl['items_per_sec']:,.0f} | {cpu_cols(rl)} | "
-            f"{hi} | {rh['sec']:.2f} | "
-            f"{rh['items_per_sec']:,.0f} | {cpu_cols(rh)} | "
-            f"{unit} | **{eff(stage, pair):.3f}** |"
-        )
-
-    def eff_str(stage: str, pair: tuple[int, int]) -> str:
-        if (stage, pair[0]) in results and (stage, pair[1]) in results:
-            return f"{eff(stage, pair):.3f}"
-        return "(incomplete)"
-
-    # the report is (re)written after EVERY completed arm, so a run cut
-    # short by the wall clock still leaves a truthful partial BENCH.md
-    for stage, cores, runs_n in plan:
-        r = one_arm(stage, cores, runs_n)
-        print(json.dumps(r), flush=True)
-        prev = results.get((stage, cores))
-        if prev is None:
-            results[(stage, cores)] = r
-        else:
-            prev["all_secs"] = sorted(prev["all_secs"] + r["all_secs"])
-            prev["loadavg_at_start"] += r["loadavg_at_start"]
-            prev["steal_cores"] = prev.get("steal_cores", []) + r.get(
-                "steal_cores", [])
-            prev["busy_cores"] = prev.get("busy_cores", []) + r.get(
-                "busy_cores", [])
-            prev["sys_cores"] = prev.get("sys_cores", []) + r.get(
-                "sys_cores", [])
-            if r["sec"] < prev["sec"]:
-                prev["sec"] = r["sec"]
-                prev["items_per_sec"] = r["items_per_sec"]
-        _write_bench_md(results, eff, row, eff_str, GATE_PAIR, WIDE_PAIR)
-
-    summary = {
-        "scoring_efficiency": round(eff("scoring", GATE_PAIR), 3),
-        "clustering_efficiency": round(eff("clustering", GATE_PAIR), 3),
-    }
-    for st in ("e2e", "clustering_global"):
-        if (st, GATE_PAIR[0]) in results and (st, GATE_PAIR[1]) in results:
-            summary[f"{st}_efficiency"] = round(eff(st, GATE_PAIR), 3)
-    for st in ("scoring", "clustering", "e2e"):
-        if (st, WIDE_PAIR[0]) in results and (st, WIDE_PAIR[1]) in results:
-            summary[f"{st}_efficiency_8_32"] = round(eff(st, WIDE_PAIR), 3)
-    print(json.dumps(summary))
-
-
-AB_FUSED_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "jobs", "ab_fused_result.json"
-)
-
-AMORTIZE_HEADING = "## e2e efficiency vs corpus size (jobs/e2e_amortize.py)"
-
-
-def _amortize_lines() -> list[str]:
-    """The BENCH.md section for jobs/e2e_amortize.py's result — the Amdahl
-    fit that evidences the e2e non-scaling fraction is FIXED per-job driver
-    work (amortizes at 100 TB), not a serial stage growing with n."""
-    amortize_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "jobs",
-        "e2e_amortize_result.json")
-    if not os.path.exists(amortize_path):
-        return []
-    with open(amortize_path) as f:
-        am = json.load(f)
-    fit = am.get("fit", {})
-    preds = fit.get("preds", [])
-    pred_txt = "; ".join(
-        f"the {p['k']:g}x corpus at t4={p['t4']} s, t16={p['t16']} s, "
-        f"efficiency {p['eff']}" for p in preds) or "?"
-    return [
-        "",
-        AMORTIZE_HEADING,
-        "",
-        "The e2e number above sits below the stage gates because a full",
-        "pipeline pays per-JOB fixed driver work (plan construction,",
-        "entity-matrix collect, per-stage job submission, CC round",
-        "barriers) that does not grow with the corpus — cost a 100 TB",
-        "job pays once. Amdahl fit from the smallest-corpus arms",
-        "(T_c = F + S/c): fixed F = "
-        f"{fit.get('fixed_s', '?')} s, scalable S = "
-        f"{fit.get('scalable_s', '?')} s; the fit PREDICTS",
-        f"{pred_txt}",
-        "— each measured below with the",
-        "identical steal- AND storm-gated harness (round 5: samples",
-        "caught inside a guest-kernel sys storm are requeued like stolen",
-        "ones; see the root-cause section below). Efficiency rising with",
-        "corpus size on the predicted curve is the measurable form of the",
-        "amortization claim (a serial stage growing with n would",
-        "flatten it instead). The busy/sys columns are /proc/stat",
-        "deltas across each measured run: busy below the core count is",
-        "the fixed serial fraction made visible (Amdahl cross-check:",
-        "F/T of the wall with 1 busy core predicts the deficit), and",
-        "sys is guest-kernel overhead — the box artifact arm, not the",
-        "job's. Round-4 history: the UNGATED harness measured efficiency",
-        "FALLING 0.751 -> 0.646 -> 0.548 across 1x/3x/9x with the 16-core",
-        "arm billing ~63% more CPU-seconds — root-caused in round 5 to",
-        "the roving storms (the wide arm's longer total exposure and 4x",
-        "per-storm bill), not to the engine; the per-stage clean-minimum",
-        "CPU matrix below shows the genuine concurrency cost is ~1.1x:",
-        "",
-        "| docs | entities | 4-core s | 16-core s | eff | samples (4c / 16c) | steal (4c / 16c) | busy (4c / 16c) | sys (4c / 16c) |",
-        "|---|---|---|---|---|---|---|---|---|",
-        *[
-            f"| {r['docs']:,} | {r['entities']:,} | {r['t4']} |"
-            f" {r['t16']} | **{r['eff']}** | {r['samples4']} /"
-            f" {r['samples16']} | {r['steal4']} / {r['steal16']} |"
-            f" {r.get('busy4', [])} / {r.get('busy16', [])} |"
-            f" {r.get('sys4', [])} / {r.get('sys16', [])} |"
-            for r in am.get("rows", [])
-        ],
-        *_amortize_verdict(am),
-    ]
-
-
-INFLATION_HEADING = ("## Wide-arm CPU inflation: root cause"
-                     " (jobs/profile_inflation_result.jsonl)")
-
-
-def _inflation_lines() -> list[str]:
-    """BENCH.md section for the round-5 work-inflation investigation: the
-    per-stage busy/sys CPU matrix at 4 vs 16 cores on the 3x corpus, with
-    per-stage CLEAN minima vs storm maxima across repeated full profiles.
-    Regenerated from jobs/profile_inflation_result.jsonl so the table can
-    never drift from the data."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jobs",
-                        "profile_inflation_result.jsonl")
-    if not os.path.exists(path):
-        return []
-    runs = []
-    with open(path) as f:
-        for line in f:
-            if line.strip():
-                runs.append(json.loads(line))
-    by = {4: {}, 16: {}}
-    for r in runs:
-        for st, d in r["stages"].items():
-            by.setdefault(r["cores"], {}).setdefault(st, []).extend(
-                s for s in d["all"])
-    stages = [s for s in ("mentions", "candidates", "coref", "ctx",
-                          "fused_resolve", "cc", "final_join")
-              if s in by.get(4, {}) and s in by.get(16, {})]
-    if not stages:
-        return []
-    rows = []
-    tot4 = tot16c = tot16s = 0.0
-    for st in stages:
-        c4 = min(s["busy_cpu_s"] for s in by[4][st])
-        sys4 = min(s["sys_cpu_s"] for s in by[4][st])
-        c16 = min(s["busy_cpu_s"] for s in by[16][st])
-        c16max = max(s["busy_cpu_s"] for s in by[16][st])
-        smax = max(s["sys_cpu_s"] for s in by[16][st])
-        tot4 += c4
-        tot16c += c16
-        tot16s += c16max
-        rows.append(
-            f"| {st} | {c4:,.0f} | {sys4:,.0f} | {c16:,.0f} |"
-            f" {c16 / c4:.2f}x | {c16max:,.0f} | {smax:,.0f} |")
-    rows.append(
-        f"| **total** | **{tot4:,.0f}** | | **{tot16c:,.0f}** |"
-        f" **{tot16c / tot4:.2f}x** | **{tot16s:,.0f}** | |")
-    return [
-        "",
-        INFLATION_HEADING,
-        "",
-        "Round 4 measured the 16-core e2e arm burning ~63% more CPU-seconds",
-        "than the 4-core arm on identical input at steal ~ 0 and flagged it",
-        "as work inflation. Round 5 cut the pipeline at every stage",
-        "boundary (parquet in /dev/shm between stages, identical",
-        "scale-profile config at both widths, 3x corpus) and measured each",
-        "stage's machine-wide busy/sys CPU across repeated full profiles.",
-        "Verdict: the genuine 4 -> 16 inflation is only the **total row",
-        "below (~1.1x)** — everything beyond it is **intermittent",
-        "guest-kernel storms**: minutes-long windows in which the identical",
-        "stage body bills 3-6x the CPU, roving across stages and runs",
-        "(candidates measured 161 / 383 / 893 busy CPU-s in three runs;",
-        "consecutive reps inside one run measured 75.6 s wall with 591",
-        "sys-CPU-s vs 27.9 s with 15), usually sys-dominated (one window",
-        "inflated user time 5x instead), at steal ~ 0, with no dependence",
-        "on engine state. A 16-vCPU mask both multiplies a",
-        "storm's bill (4x the spinning vCPUs) and, under lock-holder",
-        "preemption, likely triggers it more often — a single-guest-VM",
-        "artifact that 4 separate 4-core executors on a real cluster do",
-        "not share.",
-        "",
-        "| stage | 4c busy CPU-s (min) | 4c sys | 16c busy (clean min) |"
-        " clean inflation | 16c busy (storm max) | 16c sys (storm max) |",
-        "|---|---|---|---|---|---|---|",
-        *rows,
-        "",
-        "Consequences: (a) the bench/scaling harness now REQUEUES samples",
-        "whose machine-wide sys-core average marks a storm",
-        "(MAX_SYS_FRAC gate in stage_run, published per-sample like the",
-        "steal gate); (b) long wide-arm runs integrate storm exposure that",
-        "short narrow-arm runs dodge, so storm-window wall-clock",
-        "efficiencies are LOWER BOUNDS biased against the wide arm —",
-        "the clean-minimum CPU matrix above is the engine's true",
-        "concurrency cost; (c) the residual ~1.1x is shared-box physics",
-        "(one memory subsystem, one JVM heap, 4x GC threads) that",
-        "separate executors do not pay.",
-    ]
-
-
-LSH_HEADING = "## er_pipeline_lsh premium: where the 1.6x goes (jobs/profile_lsh.py)"
-
-
-def _lsh_lines() -> list[str]:
-    """BENCH.md section splitting the two-channel LSH blocking premium
-    (round-4 ask #6) into plan regions, from jobs/profile_lsh_result.json."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jobs",
-                        "profile_lsh_result.json")
-    if not os.path.exists(path):
-        return []
-    with open(path) as f:
-        r = json.load(f)
-    need = ("exact", "s_banded", "pairs", "verified", "dedup_nojw",
-            "lsh_full", "fallback_join_full")
-    if any(k not in r for k in need):
-        return []
-    jw_tail = round(r["lsh_full"] - r["dedup_nojw"], 2)
-    band_mention = round(r["pairs"] - r["s_banded"], 2)
-    return [
-        "",
-        LSH_HEADING,
-        "",
-        "Successive plan prefixes of the two-channel blocking join on the",
-        f"bench corpus ({r['n_mentions']:,} mentions, {r['n_missed']:,}",
-        f"exact-miss tail, {r['n_pairs']:,} banded pairs ->",
-        f"{r['n_verified']:,} Jaccard-verified), min of warm reps:",
-        "",
-        "| plan prefix | s |",
-        "|---|---|",
-        f"| exact channel alone (shared) | {r['exact']} |",
-        f"| band the dictionary surfaces | {r['s_banded']} |",
-        f"| + band the missed mentions + band join + distinct | {r['pairs']} |",
-        f"| + shingle-Jaccard verify | {r['verified']} |",
-        f"| lsh channel, NO jw/lev recompute | {r['dedup_nojw']} |",
-        f"| lsh channel, full (jw/lev recompute tail) | {r['lsh_full']} |",
-        f"| two-channel fallback join, everything | {r['fallback_join_full']} |",
-        "",
-        f"Split: banding+joining the mention side costs ~{band_mention} s",
-        f"and Jaccard verification the rest; the jw/lev recompute tail",
-        f"costs ~{jw_tail} s — effectively ZERO here, because on this",
-        "corpus the verify stage passes no pairs (the bench fixtures plant",
-        "no typo'd aliases: the exact-miss tail is filler vocabulary with",
-        "no near-miss dictionary surface, and the recompute only runs on",
-        "verified rows). Round 4 guessed the premium was the jw UDF; the",
-        "measurement says it is the banded scan of the worst-case tail",
-        "(56% of mentions missing the dictionary, zero fuzzy yield) — the",
-        "premium scales with tail size x yield, both of which a real",
-        "corpus keeps far smaller, and the recompute-on-verified-rows",
-        "design (correctness: a typo'd mention must not inherit the clean",
-        "surface's near-perfect jw) is confirmed costless when idle.",
-    ]
-
-
-def _amortize_verdict(am: dict) -> list[str]:
-    """One data-driven sentence interpreting the measured big-corpus row
-    against the Amdahl prediction (regenerated with the table on every
-    --scaling / --amortize-md rewrite, so it can never contradict the data)."""
-    rows, preds = am.get("rows", []), am.get("fit", {}).get("preds", [])
-    if len(rows) < 2 or len(preds) != len(rows) - 1:
-        return []
-    measured, predicted = rows[-1]["eff"], preds[-1]["eff"]
-    ks = "x -> ".join(f"{r['docs'] / rows[0]['docs']:g}" for r in rows) + "x"
-    trail = " -> ".join(str(r["eff"]) for r in rows)
-    if measured >= predicted - 0.03:
-        shape = ("at-or-above the fixed-overhead curve (largest corpus: "
-                 f"measured {measured} vs predicted {predicted})")
-        conclusion = ("the non-scaling fraction amortizes with corpus size, "
-                      "as a fixed per-job cost must — extrapolated to 100 TB "
-                      "it vanishes and e2e efficiency converges to the gated "
-                      "stage efficiencies")
-    else:
-        shape = ("below the fixed-overhead curve (largest corpus: measured "
-                 f"{measured} vs predicted {predicted})")
-        # attribute the gap: per-doc CPU of each arm, largest vs middle
-        # row — if one arm's CPU bill inflated beyond its own clean rate,
-        # the gap is storm exposure (root-cause section), not a serial
-        # fraction growing with n
-        big, mid = rows[-1], rows[-2]
-
-        def cpu_per_kdoc(r, arm):
-            b = r.get(f"busy{arm}") or []
-            t = r[f"t{arm}"]
-            return (sum(b) / len(b)) * t * 1000.0 / r["docs"] if b else None
-
-        notes = []
-        for arm in (4, 16):
-            a, b = cpu_per_kdoc(big, arm), cpu_per_kdoc(mid, arm)
-            if a and b:
-                notes.append(f"{arm}-core arm {a / b - 1.0:+.0%}")
-        conclusion = (
-            "the gap is the sandbox's storm exposure, not an algorithmic "
-            "serial fraction: per-doc CPU vs the middle row moved "
-            + " / ".join(notes) + " — samples this long integrate roving "
-            "guest-kernel storm windows the requeue gate cannot dodge "
-            "(see the root-cause section below); the middle row ON the "
-            "curve plus the ~1.1x clean per-stage CPU matrix are the "
-            "engine's scaling evidence")
-    gate = (" At the largest corpus the e2e efficiency itself clears the "
-            "0.8 stage gate." if measured >= 0.8 else "")
-    return [
-        "",
-        f"Measured: efficiency rose {trail} across {ks} the corpus, "
-        f"{shape}; {conclusion}.{gate}",
-    ]
-
-
-def splice_amortize_md() -> None:
-    """Fold jobs/e2e_amortize_result.json into the EXISTING BENCH.md without
-    re-running the full scaling matrix (--scaling rewrites the whole file;
-    this mode only replaces/inserts the amortize section). The section goes
-    where _write_bench_md puts it: right before the gate-pair diagnosis."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.md")
-    with open(path) as f:
-        lines = f.read().splitlines()
-    new = _amortize_lines()
-    if not new:
-        print("no jobs/e2e_amortize_result.json — nothing to splice")
-        return
-    anchor = "## Why the gate pair is 4 -> 16 cores on this box"
-    if AMORTIZE_HEADING in lines:
-        start = lines.index(AMORTIZE_HEADING) - 1  # the blank line before it
-        end = next((i for i in range(start + 2, len(lines))
-                    if lines[i].startswith("## ")), len(lines))
-        lines[start:end] = new + ([""] if end < len(lines) else [])
-    elif anchor in lines:
-        i = lines.index(anchor)
-        lines[i:i] = new[1:] + [""]
-    else:
-        lines += new
-    with open(path, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"spliced amortize section into {path}")
-
-
-def _write_bench_md(results, eff, row, eff_str, GATE_PAIR, WIDE_PAIR) -> None:
-    rows = [row("scoring", "docs/s", GATE_PAIR),
-            row("clustering", "mentions/s", GATE_PAIR),
-            row("e2e", "docs/s", GATE_PAIR)]
-    ctx_rows = [row("clustering_global", "mentions/s", GATE_PAIR)]
-    for st, unit in (("scoring", "docs/s"), ("clustering", "mentions/s"),
-                     ("e2e", "docs/s")):
-        if (st, WIDE_PAIR[0]) in results or (st, WIDE_PAIR[1]) in results:
-            ctx_rows.append(row(st, unit, WIDE_PAIR))
-    e2e_lo = results.get(("e2e", GATE_PAIR[0])) or results.get(("e2e", 8))
-
-    ab_lines = []
-    if os.path.exists(AB_FUSED_PATH):
-        with open(AB_FUSED_PATH) as f:
-            ab = json.load(f)
-        ab_lines = [
-            "",
-            "## Fused vs row-join scoring A/B (jobs/ab_fused_result.json)",
-            "",
-            "Full er_pipeline, interleaved arms in ONE session (same JVM",
-            "warmth), 1 warm-up per arm then alternating measured rounds at",
-            f"local[32] on the {ER_DOCS:,}-doc bench corpus; each sample",
-            "waits for the machine busy fraction to drop and is annotated",
-            "with the hypervisor steal it absorbed; min over rounds is the",
-            "estimator, all samples shown:",
-            "",
-            "| arm | min s | samples | stolen vCPUs per sample |",
-            "|---|---|---|---|",
-            f"| fused cogrouped kernel | **{ab['min_fused']}** |"
-            f" {ab['fused']} | {ab.get('fused_steal', 'n/a')} |",
-            f"| row-join plan | {ab['min_rowjoin']} | {ab['rowjoin']} |"
-            f" {ab.get('rowjoin_steal', 'n/a')} |",
-            "",
-            ("The fused path wins on this measurement"
-             if ab["min_fused"] <= ab["min_rowjoin"]
-             else "On this measurement the two arms are within host noise"
-                  " of each other (the fused min trails the row-join min)")
-            + " and fused stays the auto-selected default at dictionary",
-            "scale (scoring.fused_policy_ok): it ships skinny Arrow rows",
-            "through one exchange where the row-join plan shuffles the full",
-            "candidate rows twice — the gap widens with corpus size. The",
-            "row-join plan remains the safe shape past the driver-collect",
-            "budget and is asserted row-for-row equal in",
-            "tests/test_pipeline_e2e.py.",
-        ]
-
-    amortize_lines = _amortize_lines()
-
-    lines = [
-        "# BENCH — stage throughput & N -> 4N scaling",
-        "",
-        "North-rule criterion: throughput scaling efficiency >= 0.8 between",
-        "N and 4N executors **on the clustering and scoring stages**. Sandbox",
-        "stand-in (no real cluster here): the identical job on the identical",
-        "input in two JVMs pinned with taskset to N and 4N cores; best of the",
-        "measured runs after two warm-up runs (warm-ups absorb one-time",
-        "whole-stage-codegen + JIT compilation, which amortizes to nothing at",
-        "100 TB; best-of-N is the robust estimator on this noisy shared VM —",
-        "all samples are listed below, each with its hypervisor-steal and",
-        "loadavg annotations). The gate pair runs at N=4 -> 4N=16 cores (see",
-        "the diagnosis section for the measured reasons); samples that lost",
-        f"more than {MAX_STEAL_CORES} vCPUs to steal are requeued with a",
-        "4*runs+4 attempt budget so every arm lands >= 2 steal-clean",
-        "samples — the round-3 clustering-4 arm kept only one, which the",
-        "judge correctly flagged as the weakest link.",
-        "",
-        f"Corpus: {SCALING_DOCS:,} interleaved documents, {SCALING_ENTITIES:,}"
-        " entities, deterministic seed 42.",
-        f"Clustering input: resolved mentions sharded {CC_AMPLIFY}x"
-        " (independent shards == the same job on a corpus that many times"
-        " larger), stored partitionBy(shard).",
-        "",
-        f"## Gated stages + e2e at N={GATE_PAIR[0]} -> 4N={GATE_PAIR[1]} cores",
-        "",
-        "| stage | input items | N cores | N s | N thr | N busy-cpu-s |"
-        " N sys-cpu-s | 4N cores | 4N s | 4N thr | 4N busy-cpu-s |"
-        " 4N sys-cpu-s | unit | efficiency |",
-        "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|",
-        *rows,
-        "",
-        f"**scoring efficiency = {eff_str('scoring', GATE_PAIR)}, clustering"
-        f" efficiency = {eff_str('clustering', GATE_PAIR)}** (target >= 0.8);"
-        f" e2e at the same pair = {eff_str('e2e', GATE_PAIR)} (context; the"
-        " north rule gates the two stages).",
-        "",
-        "The clustering stage is clustering.cluster_assignments over the",
-        "shard union: one group-by on the winner entity, joined back to",
-        "the mentions, with no iterative connected-components job (each",
-        "mention has one winner, so the components are the entity groups).",
-        "The global row below is the same plan with the shard column",
-        "pruned at the scan.",
-        "",
-        "## Context rows (global clustering; 8 -> 32 where measured)",
-        "",
-        "| stage | input items | N cores | N s | N thr | N busy-cpu-s |"
-        " N sys-cpu-s | 4N cores | 4N s | 4N thr | 4N busy-cpu-s |"
-        " 4N sys-cpu-s | unit | efficiency |",
-        "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|",
-        *ctx_rows,
-        "",
-        "Round-3 history for the wide pair (same harness, pre-sharding,",
-        "kept for the record): scoring 0.569, clustering 0.338, e2e 0.378 at",
-        "8 -> 32 before the Arrow featurizer; after it the 4 -> 16 gate",
-        "passed at scoring 0.830 / clustering 0.857 (single global CC job,",
-        "one clean 4-core sample — superseded by the table above).",
-        "",
-        "Round-4 -> 5 revision, stated plainly: round 4 published",
-        "clustering 0.991 from a narrow arm whose samples spread",
-        "[129, 155, 211] s — steal-clean but (per the round-5 root-cause",
-        "work) storm-inflated, which FLATTERED the ratio. This round the",
-        "box was rebooted and the storm gate requeues contaminated",
-        "samples; against the honest narrow arm the round-4 concurrent",
-        "driver config measured 0.642 with 1.47x CPU (samples",
-        "[76.7, 78.0, 84.4] s at 4 cores, [29.9, 30.7, 38.1] at 16), so",
-        "the driver default was revised to the single-job plan the table",
-        "above measures — a config change made FOR the measurement, with",
-        "both configs' numbers published here.",
-        *ab_lines,
-        *amortize_lines,
-        *_inflation_lines(),
-        *_lsh_lines(),
-        "",
-        "## Why the gate pair is 4 -> 16 cores on this box",
-        "",
-        "The north rule scales EXECUTORS: 4N executors are 4x the machines —",
-        "4x the memory buses, kernels, GC pools and page caches. This sandbox",
-        "can only scale CORES of one JVM on one shared, noisy guest VM, and a",
-        "32-core arm on this box hits three artifacts a real 4N-executor",
-        "fleet does not have (all measured, see the per-run probes recorded",
-        "in the repo history and the steal column below):",
-        "",
-        "1. **Job saturation ~20-21 busy cores.** Per-/proc/stat accounting",
-        "   across quiet clustering runs: user+sys ~21 cores busy at",
-        "   local[32] (wall 61-64 s), i.e. a third of the arm idles in stage",
-        "   tails and per-round driver barriers no matter how many cores the",
-        "   box offers. On a cluster those barriers cost the same at N and",
-        "   4N executors; on one box they cap the wide arm's speedup at",
-        "   ~21/8 = 2.6x, i.e. efficiency can never exceed ~0.66 at 8 -> 32",
-        "   even for a perfectly scalable job. At 4 -> 16 both arms sit",
-        "   below saturation and the pair measures the job, not the box.",
-        "2. **Guest-kernel storms.** Identical back-to-back runs flip from",
-        "   2 to 14+ cores of sys time, turning 61 s runs into 485 s runs;",
-        "   wide arms are hit proportionally harder (every core traps into",
-        "   the same guest kernel). Round-4 root-cause (burst-gated kernel-",
-        "   stack sampling of running threads during 9x-corpus e2e runs):",
-        "   the dominant kernel cost is hrtimer reprogramming",
-        "   (clockevents_program_event) + RCU + scheduler-tick IRQ overhead",
-        "   — each timer reprogram is a VM exit to a contended hypervisor —",
-        "   plus page-fault churn around JVM<->Python Arrow batch",
-        "   boundaries (64-116k faults/s machine-wide during exchange",
-        "   phases). NOT GC (jstat: ~1.5% of wall), NOT disk (io counters",
-        "   flat), NOT THP/compaction/reclaim (vmstat flat), NOT",
-        "   shuffle-block mmap (12/4579 stack samples; raising",
-        "   spark.storage.memoryMapThreshold to 2g changed nothing). The",
-        "   one lever that moved it: 10x bigger Arrow batches (fewer",
-        "   kernel crossings per row) — adopted in the scale profile, see",
-        "   jobs/ab_arrow_batch.py and the behavior note below.",
-        "3. **Hypervisor steal.** Bursts of 5+ stolen vCPUs (measured via",
-        "   /proc/stat steal) — a 279 s clustering sample vs the 64 s quiet",
-        "   value. Runs that lose >" + str(MAX_STEAL_CORES) +
-        " vCPUs to steal are requeued (bounded),",
-        "   and every sample's steal is published below. The bias is",
-        "   asymmetric: ~1 stolen vCPU costs a 4-core arm ~25% and a",
-        "   16-core arm ~6%, INFLATING measured efficiency — which is why",
-        "   the gate now requires steal-clean narrow-arm samples.",
-        "",
-        "Reference single-node CPU baseline: 7.8 docs/s end-to-end (AIDA,",
-        "README.md:225 of the reference). This engine end-to-end at "
-        + (f"local[{GATE_PAIR[0]}]: {e2e_lo['items_per_sec']:,.0f} docs/s."
-           if e2e_lo else "(pending)"),
-        "",
-        "## Behavior notes (round 4)",
-        "",
-        "- ngram_jaccard df_cap semantics (since round 3): frequent grams",
-        "  (document frequency > df_cap) are removed from BOTH the Jaccard",
-        "  numerator and denominator, not just the candidate index — scores",
-        "  and the emitted pair set differ from the round-2 release for any",
-        "  doc containing a frequent gram. Intentional (boilerplate must not",
-        "  dominate similarity) and oracle-matched; not a bug.",
-        "- simhash defaults moved 16 -> 64 bits (round 4): 16-bit hashes are",
-        "  collision-dominated past ~10^6 docs. Hash VALUES for the same",
-        "  text changed only in bits 16+; 16-bit callers pass num_bits=16.",
-        "- lsh_candidate_pairs bucket_cap now defaults to 2000 (was None):",
-        "  uncapped boilerplate buckets would OOM the posting-list pair",
-        "  emitter; dropped volume is observable, pass None to disable.",
-        "- scale profile Arrow batches 10k -> 100k records (round 4): the",
-        "  per-batch JVM<->Python kernel crossings were the measured",
-        "  non-scaling cost at the 9x amortization corpus (A/B in",
-        "  jobs/ab_arrow_batch.py: 411-463 s -> 370 s at 16 cores).",
-        "  Results are batch-size-invariant (kernel property tests);",
-        "  the local profile keeps Spark's 10k default.",
-        "",
-        "Raw samples (seconds, sorted ascending; per measured run the",
-        "loadavg(1m) at start, stolen vCPUs (steal-time delta / wall), and",
-        "machine-wide busy/sys cores DURING the run (/proc/stat deltas) —",
-        "busy ~= cores with low sys means the arm really computed; busy <<",
-        "cores is serial fraction; high sys is guest-kernel overhead. Runs",
-        "wait for the instantaneous machine busy fraction <= "
-        f"{MAX_BENCH_BUSY} before starting:",
-        *[
-            f"- {stage} local[{cores}]: {results[(stage, cores)]['all_secs']}"
-            f" (load {results[(stage, cores)]['loadavg_at_start']}, "
-            f"stolen vCPUs {results[(stage, cores)].get('steal_cores', [])}, "
-            f"busy {results[(stage, cores)].get('busy_cores', [])}, "
-            f"sys {results[(stage, cores)].get('sys_cores', [])})"
-            for (stage, cores) in results
-        ],
-    ]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
+    print(json.dumps({
+        "metric": "scaling_efficiency",
+        "cpus": cpus,
+        "arms": list(arms),
+        "docs": SCALING_DOCS,
+        "entities": SCALING_ENTITIES,
+        "scoring_efficiency": eff("scoring"),
+        "clustering_efficiency": eff("clustering"),
+        "stages": results,
+    }))
 
 
 if __name__ == "__main__":
-    if "--prep-run" in sys.argv:
-        i = sys.argv.index("--prep-run")
-        print(prep_stage_inputs(sys.argv[i + 1]))
-    elif "--stage-run" in sys.argv:
+    if "--stage-run" in sys.argv:
         i = sys.argv.index("--stage-run")
         stage_run(sys.argv[i + 1], sys.argv[i + 2], sys.argv[i + 3],
-                  int(sys.argv[i + 4]),
-                  int(sys.argv[i + 5]) if len(sys.argv) > i + 5 else BENCH_RUNS)
+                  int(sys.argv[i + 4]))
     elif "--scaling" in sys.argv:
         main_scaling()
-    elif "--amortize-md" in sys.argv:
-        splice_amortize_md()
     else:
         main_bench()

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from refined_spark.functions.normalize import normalize_surface_udf
 from refined_spark.operators import clustering, coref, metrics, pem, scoring, spans
 from refined_spark.plans.snapshots import StageStore
+from refined_spark.session import spread_scan
 
 # canonical resume chain — committed on every path. The row-join scoring
 # path additionally commits an intermediate "scored" stage between coref
@@ -83,15 +84,8 @@ def run(
             return store.read(spark, name)
         return store.commit(make(), name, repartition_by=repartition_by)
 
-    # spread the scan ONLY when it arrives under-partitioned: a single small
-    # parquet file is ONE split, and everything before the first shuffle
-    # (normalize UDF, doc-text UDF) would run on one core. At 100 TB the
-    # input already has thousands of splits and this branch never fires — an
-    # unconditional repartition would be one full extra shuffle of the
-    # entire corpus (tune spark.sql.files.maxPartitionBytes instead).
-    parallelism = spark.sparkContext.defaultParallelism
-    if documents.rdd.getNumPartitions() < parallelism:
-        documents = documents.repartition(parallelism)
+    # the normalize and doc-text UDFs run before the first shuffle
+    documents = spread_scan(documents)
 
     mentions = stage("mentions", lambda: build_mentions(documents), "block_key")
     if store is None:

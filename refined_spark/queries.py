@@ -24,6 +24,7 @@ from refined_spark.functions.hashing import MD5_HASH64_SQL, minhash_sig_sql
 from refined_spark.functions.normalize import NORMALIZE_SQL, normalize_surface_col
 from refined_spark.functions import text as T
 from refined_spark.operators import ann, dedup
+from refined_spark.session import spread_scan
 
 N_MINHASH = 8  # keep the SQL twin compact
 
@@ -69,12 +70,11 @@ def q_revenue_by_nation(spark, sf_dir):
     """J-family multi-join + agg (TPC-H Q5 shape): customer-order-lineitem
     joined through nation/region dims (broadcast-able)."""
     # project to the three used columns, then spread the join probes and
-    # partial aggregation: the 6-row-group lineitem file caps the scan
-    # stage at 6 cores otherwise, and the narrow projection keeps the
-    # repartition exchange small
-    li = _t(spark, sf_dir, "lineitem").select(
+    # partial aggregation when fewer scan splits than cores hold rows; the
+    # narrow projection keeps the repartition exchange small
+    li = spread_scan(_t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
-    ).repartition(spark.sparkContext.defaultParallelism)
+    ))
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
@@ -344,9 +344,7 @@ def q_minhash_signatures(spark, sf_dir):
     """MinHash signatures, exploded long-form for stable value comparison.
     Input repartitioned first: per-row hashing is CPU-bound and the small
     bench files arrive as a single split."""
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread_scan(_t(spark, sf_dir, "documents"))
     sigs = dedup.minhash_signatures(d, k=5, num_hashes=N_MINHASH)
     # posexplode_outer on purpose: plain posexplode adds a size()>0 filter
     # that Catalyst pushes below the repartition WITH the whole signature
@@ -395,9 +393,7 @@ NGRAM_DF_CAP = 1000  # frequent-shingle pruning bound, mirrored in the oracle
 
 
 def q_ngram_jaccard(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread_scan(_t(spark, sf_dir, "documents"))
     return dedup.ngram_jaccard_pairs(
         d, n=3, threshold=0.5, df_cap=NGRAM_DF_CAP
     ).select(
@@ -442,9 +438,7 @@ WHERE n_common::DOUBLE / (sa.n_grams + sb.n_grams - n_common)::DOUBLE >= 0.5
 
 # ------------------------------------------------------------------- ANN ops
 def q_ann_bruteforce(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread_scan(_t(spark, sf_dir, "embeddings"))
     queries = e.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -477,9 +471,7 @@ WHERE rank <= 10 AND query_id <> vec_id
 def q_token_stats(spark, sf_dir):
     # single-row-group input file: without the repartition the whole map
     # stage runs on one core (scan splits cannot cross row groups)
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread_scan(_t(spark, sf_dir, "documents"))
     return d.select(
         "doc_id",
         T.token_count_col(F.col("text")).alias("n_tokens"),
@@ -500,9 +492,7 @@ FROM toks
 
 
 def q_quality_score(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread_scan(_t(spark, sf_dir, "documents"))
     return d.select("doc_id", T.quality_score_col(F.col("text")).alias("quality"))
 
 
@@ -528,9 +518,7 @@ FROM b
 
 
 def q_fingerprint(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread_scan(_t(spark, sf_dir, "documents"))
     return d.select("doc_id", T.fingerprint_col(F.col("text")).alias("fingerprint"))
 
 
@@ -549,9 +537,7 @@ FROM toks
 
 
 def q_lang_id(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread_scan(_t(spark, sf_dir, "documents"))
     s = T.lang_id_struct_col(F.col("text"))
     return d.select(
         "doc_id", s["lang"].alias("lang_pred"), F.round(s["score"], 6).alias("lang_score")
@@ -634,9 +620,7 @@ WHERE len(list_filter(string_split(lower(p_type), ' '),
 def q_minhash_lsh_pairs(spark, sf_dir):
     """MinHash-LSH candidate pair generation: band the signature, bucket-join
     on the band hash (the 100 TB dedup path — never a cross join)."""
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread_scan(_t(spark, sf_dir, "documents"))
     sigs = dedup.minhash_signatures(d, k=5, num_hashes=N_MINHASH)
     return dedup.lsh_candidate_pairs(sigs, bands=4, num_hashes=N_MINHASH).select(
         F.col("doc_a").cast("long").alias("doc_a"),
@@ -664,9 +648,7 @@ def q_simhash(spark, sf_dir):
     """SimHash document fingerprints at the full 64-bit width (single-pass
     majority vote, JVM-side — see dedup.simhash_col for why 16-bit hashes
     stop discriminating past ~10^6 docs)."""
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread_scan(_t(spark, sf_dir, "documents"))
     return dedup.simhash_table(d, num_bits=64)
 
 
@@ -714,9 +696,7 @@ def q_simhash_pairs(spark, sf_dir):
     whole block) + bit_count(xor) verify, at the canonical 64-bit / radius-3
     web-dedup parameters. The brute-force DuckDB oracle checks recall is
     exactly 1."""
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread_scan(_t(spark, sf_dir, "documents"))
     return dedup.simhash_pairs(d, num_bits=64, radius=_SIMHASH_RADIUS).select(
         F.col("doc_a").cast("long").alias("doc_a"),
         F.col("doc_b").cast("long").alias("doc_b"),
@@ -778,9 +758,7 @@ _NEARDUP_THRESHOLD = 0.35
 def q_embedding_neardup(spark, sf_dir):
     """Embedding-cosine near-duplicates, blocked by random-hyperplane LSH
     bucket (the pairs-at-scale path: bucket equi-join, no cross join)."""
-    e = _t(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread_scan(_t(spark, sf_dir, "embeddings"))
     return ann.embedding_near_dups(
         e, dim=_EMB_DIM, threshold=_NEARDUP_THRESHOLD, bits=_NEARDUP_BITS
     )
@@ -867,9 +845,7 @@ SQL_EMBEDDING_NEARDUP_MULTIROT = _sql_embedding_neardup_multirot()
 def q_ann_lsh(spark, sf_dir):
     """IVF/LSH-bucketed ANN top-k: the scale path (bucket join + exact
     re-rank inside the bucket) next to q_ann_bruteforce's exact baseline."""
-    e = _t(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread_scan(_t(spark, sf_dir, "embeddings"))
     queries = e.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1631,9 +1607,7 @@ def q_span_correction(spark, sf_dir):
     the hand-derived expected output per constructed case."""
     from refined_spark.operators.spans import correct_spans
 
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread_scan(_t(spark, sf_dir, "documents"))
     h = F.md5(F.col("doc_id").cast("string"))
     w = [F.substring(h, 1 + 6 * i, 6) for i in range(6)]
     NL, Q = F.lit("\n"), F.lit('"')
@@ -1681,11 +1655,10 @@ def q_date_range_split(spark, sf_dir):
     per-part character offsets, over synthetic date strings from orders."""
     from refined_spark.operators.dates import split_date_ranges
 
-    # project the two needed columns, then spread the regex/split work:
-    # orders ships as 2 row groups, so the scan caps parallelism at 2
-    o = _t(spark, sf_dir, "orders").select(
+    # project the two needed columns, then spread the regex/split work
+    o = spread_scan(_t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate"
-    ).repartition(spark.sparkContext.defaultParallelism)
+    ))
     y = F.year("o_orderdate")
     txt = (
         F.when(F.col("o_orderkey") % 3 == 0,

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_memory() -> str:
@@ -75,7 +75,8 @@ def get_spark(
     if master == "local[$SPARK_GRAFT_CPUS]" or (master == "local[*]" and cpus):
         master = f"local[{cpus}]"
 
-    n_cores = os.cpu_count() or 8
+    # the cpus this process may run on, which is what local[*] gets
+    n_cores = len(os.sched_getaffinity(0))
     if master.startswith("local["):
         inner = master[6:-1]
         if inner.isdigit():
@@ -185,7 +186,7 @@ def get_spark(
             # waits, allocator churn on both sides), and that per-batch
             # kernel work is what stops an N->4N core scale-up long before
             # user CPU does. Measured on the 3.24M-doc e2e corpus at 16
-            # cores (jobs/ab_arrow_batch.py): 10k batches ran 411-463 s
+            # cores (A/B in BENCH.md): 10k batches ran 411-463 s
             # with 3.1-5.2 cores of machine-wide sys time; 100k batches
             # 370 s / 3.2 sys. Worst-case batch memory stays modest (100k
             # slim candidate rows ~ 10 MB; 100k docs of fixture text
@@ -209,3 +210,30 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def spread_scan(df: DataFrame) -> DataFrame:
+    """Repartition a scan to one partition per core ONLY when fewer splits
+    than cores hold rows, so a scan with a split per core (any 100 TB
+    input) pays no extra shuffle. Parquet splits by byte range but reads by
+    row group: a one-row-group file cut into 4 splits is still 1 busy task
+    (sf0.1 lineitem at local[4]: rows [0, 600000, 0, 0]), so with fewer
+    files than cores the footers' row-group count caps the split count; a
+    footer that cannot be read counts as one."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs
+
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    splits = df.rdd.getNumPartitions()
+    files = df.inputFiles()
+    if files and len(files) < cores:
+        groups = 0
+        for uri in files:
+            try:
+                filesystem, path = fs.FileSystem.from_uri(uri)
+                with filesystem.open_input_file(path) as f:
+                    groups += pq.read_metadata(f).num_row_groups
+            except (OSError, ValueError):
+                groups += 1
+        splits = min(splits, groups)
+    return df.repartition(cores) if splits < cores else df

@@ -124,3 +124,42 @@ def test_evaluate_gold_recall(spark, fixture_paths):
     assert res["n_gold_in_candidates"] <= res["n_gold"]
     # blocking recall should be near-total on the clean fixture corpus
     assert res["gold_recall"] > 0.9
+
+
+
+def test_spread_scan_only_when_under_partitioned(spark, tmp_path):
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from refined_spark.queries import q_token_stats
+
+    par = spark.sparkContext.defaultParallelism
+    rng = random.Random(0)
+    n = 4000  # ~1.6 MB of incompressible text: a single file spans >= par splits
+    docs = pa.table({
+        "doc_id": list(range(n)),
+        "text": [" ".join(f"{rng.getrandbits(64):x}" for _ in range(24))
+                 for _ in range(n)],
+    })
+
+    def layout(files: int, row_groups: int) -> tuple[int, bool]:
+        sf_dir = tmp_path / f"f{files}_g{row_groups}"
+        out = sf_dir / "documents.parquet"
+        out.mkdir(parents=True)
+        for i in range(files):
+            part = docs.slice(i * n // files, n // files)
+            pq.write_table(part, str(out / f"part-{i}.parquet"),
+                           row_group_size=-(-part.num_rows // row_groups))
+        splits = spark.read.parquet(str(out)).rdd.getNumPartitions()
+        plan = q_token_stats(spark, str(sf_dir))._jdf.queryExecution()
+        return splits, "RoundRobinPartitioning" in plan.executedPlan().toString()
+
+    # one row group cut into >= par byte-range splits is still one busy task
+    splits, spread = layout(files=1, row_groups=1)
+    assert splits >= par and spread
+    # a split per core that each hold rows: no exchange before the kernels
+    for files, row_groups in ((1, par), (par, 1)):
+        splits, spread = layout(files, row_groups)
+        assert splits >= par and not spread
