@@ -18,7 +18,11 @@ Scale notes:
     _n_blocks): rows replicate to B block-pair tasks, each task emits,
     dedups and filters its share of the pairs in numpy, and nothing
     pair-shaped is shuffled — a hot bucket's O(d^2) pairs split across
-    B(B+1)/2 tasks instead of running in one.
+    B(B+1)/2 tasks instead of running in one. Block pairs carry dense ids
+    0..B(B+1)/2-1 and `repartitionById` gives each its own partition: one
+    Python task per block pair, none empty. Keyed operators (LSH, SimHash)
+    size their buckets with a window in the pass that computes the keys,
+    so the signature kernel runs once.
   - caps: splitting a hot bucket spreads its O(d^2) work but does not
     shrink it, so boilerplate buckets (LSH bucket_cap, SimHash bucket_cap)
     and grams (n-gram df_cap) above a cap are dropped; both bucket caps
@@ -29,7 +33,9 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import operator
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from refined_spark.functions.hashing import (
@@ -53,9 +59,13 @@ def normalized_text_col(text: Column) -> Column:
 # the similarity filter all happen task-locally in numpy, and nothing
 # pair-shaped is ever shuffled. Replication cost is one copy of each doc's
 # (small) key row per block — O(n·B) bytes for O(n^2/B^2)-per-task work;
-# B grows as sqrt(cores). Inside a task, doc ids are factorized with
-# sort=True, so the pair kernel runs on int codes whose order is the id
-# order (doc_a < doc_b for any orderable id type, strings included).
+# B grows as sqrt(cores). The B(B+1)/2 block pairs are numbered densely and
+# `repartitionById` puts pair p on partition p, so the exchange runs exactly
+# one Python task per block pair and no empty ones (every Python task pays
+# a fixed worker cost, whatever it holds). Inside a task, doc ids are
+# factorized with sort=True, so the pair kernel runs on int codes whose
+# order is the id order (doc_a < doc_b for any orderable id type, strings
+# included).
 # --------------------------------------------------------------------------
 
 
@@ -68,42 +78,50 @@ def _n_blocks(spark) -> int:
     return b
 
 
+def _block_pairs(n_blocks: int) -> list:
+    """Every block pair (i, j), i <= j, in row-major upper-triangle order:
+    a pair's index in this list is its dense id (the decode table)."""
+    return [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
+
+
+def _pair_id(i, j, n_blocks: int, shiftright=operator.rshift):
+    """Dense id of block pair (i, j), i <= j: i*B - i(i-1)/2 + (j-i), its
+    index in _block_pairs(B), so the ids fill [0, B(B+1)/2). Takes ints,
+    or Columns with shiftright=F.shiftright."""
+    return shiftright(i * (2 * n_blocks + 1 - i), 1) + j - i
+
+
 def _pid_explode(blk: Column, n_blocks: int) -> Column:
-    """All B canonical block-pair ids {(min(blk,k), max(blk,k))} a doc's
-    rows must reach, encoded i*B+j with i <= j."""
+    """The dense ids of the B block pairs {(min(blk,k), max(blk,k))} a
+    doc's rows must reach."""
     ks = F.sequence(F.lit(0), F.lit(n_blocks - 1))
-    return F.explode(
-        F.transform(
-            ks,
-            lambda k: F.least(blk, k) * n_blocks + F.greatest(blk, k),
-        )
-    )
+    return F.explode(F.transform(ks, lambda k: _pair_id(
+        F.least(blk, k), F.greatest(blk, k), n_blocks, F.shiftright)))
 
 
 def _block_pair_map(rows: DataFrame, process, schema: str) -> DataFrame:
     """Replicate each (doc_id, ...) row to the B block-pair tasks its doc
     takes part in (columns `blk`, `pid` added) and run `process(g, i, j)`
-    once per task (i <= j its two blocks). One Python partition may hold
-    several pids and one pid's rows may span Arrow batches, so the
-    partition's batches are concatenated before grouping by pid."""
+    once per task (i <= j its two blocks). `repartitionById` sends pid p to
+    partition p, so a partition holds exactly one pid; its rows may span
+    Arrow batches, which are concatenated first."""
     import pandas as pd
 
     nb = _n_blocks(rows.sparkSession)
+    pairs = _block_pairs(nb)
     rep = rows.withColumn(
         "blk", F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int")
     ).withColumn("pid", _pid_explode(F.col("blk"), nb))
 
     def f(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        for pid, g in pdf.groupby("pid", sort=False):
-            out = process(g, *divmod(int(pid), nb))
+        chunks = [b for b in batches if len(b)]
+        if chunks:
+            g = pd.concat(chunks, ignore_index=True)
+            out = process(g, *pairs[int(g["pid"].iat[0])])
             if out is not None and len(out):
                 yield out
 
-    return rep.repartition(2 * nb * nb, "pid").mapInPandas(f, schema=schema)
+    return rep.repartitionById(len(pairs), "pid").mapInPandas(f, schema=schema)
 
 
 def _dedup_sorted_pairs(a, b, c=None):
@@ -232,23 +250,27 @@ def _task_pairs(keys, ids, blk, i, j, counts: bool = False):
 
 def _keyed_pairs(rows: DataFrame, keys: list, bucket_cap: int | None,
                  observation, metric: str, emit, schema: str) -> DataFrame:
-    """Pairs of docs sharing a bucket of (doc_id, *keys, ...) rows. Bucket
-    sizes are aggregated once globally (the cap and >= 2 filters need
-    GLOBAL membership); buckets over `bucket_cap` are dropped and their
-    rows summed into the `observe` metric `metric`; surviving rows go to
-    their block-pair tasks, where `emit(g, ra, rb)` turns the task's
-    unique pairs into output rows."""
-    # a null id has no place in the id order (factorize codes it -1)
-    rows = rows.where(F.col("doc_id").isNotNull())
-    bsizes = rows.groupBy(*keys).agg(F.count("*").alias("__bsz"))
+    """Pairs of docs sharing a bucket of (doc_id, *keys, ...) rows. Each
+    row gets its bucket's GLOBAL size from a window over the keys, in the
+    same pass that computes the rows (a separate size aggregate plus a
+    join back would evaluate `rows`, and the kernel behind it, twice).
+    Rows of buckets over `bucket_cap` are dropped and counted into the
+    `observe` metric `metric`; rows of buckets of >= 2 go to their
+    block-pair tasks, where `emit(g, ra, rb)` turns the task's unique
+    pairs into output rows. A null id has no place in the id order
+    (factorize codes it -1) and a null key pairs with nothing, so rows
+    with either are dropped first."""
+    rows = rows.dropna(subset=["doc_id", *keys])
+    sized = rows.withColumn(
+        "__bsz", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    )
     if bucket_cap is not None:
-        bsizes = bsizes.observe(
+        sized = sized.observe(
             observation,
-            F.sum(
-                F.when(F.col("__bsz") > bucket_cap, F.col("__bsz")).otherwise(0)
-            ).alias(metric),
+            F.sum(F.when(F.col("__bsz") > bucket_cap, 1).otherwise(0))
+            .alias(metric),
         ).where(F.col("__bsz") <= bucket_cap)
-    keep = bsizes.where(F.col("__bsz") >= 2).select(*keys)
+    keep = sized.where(F.col("__bsz") >= 2).drop("__bsz")
 
     def process(g, i, j):
         res = _task_pairs(
@@ -257,7 +279,7 @@ def _keyed_pairs(rows: DataFrame, keys: list, bucket_cap: int | None,
         )
         return None if res is None else emit(g, *res)
 
-    return _block_pair_map(rows.join(keep, keys, "left_semi"), process, schema)
+    return _block_pair_map(keep, process, schema)
 
 
 def exact_duplicates(documents: DataFrame, id_col: str = "doc_id",
@@ -371,8 +393,9 @@ def lsh_candidate_pairs(
     Observation/QueryExecution listener (the A9 telemetry channel; tests
     read it directly).
 
-    Plan: global bucket-size aggregate (cap and >= 2 filters) -> surviving
-    banded rows replicate to their B block-pair tasks -> each task emits
+    Plan: global bucket sizes from a window over the band key (cap and
+    >= 2 filters; the signatures are computed once) -> surviving banded
+    rows replicate to their B block-pair tasks -> each task emits
     and dedups its share of every bucket's pairs locally in numpy
     (block-pair header comment above) — nothing pair-shaped is shuffled
     and a near-cap bucket's O(d^2) splits across all tasks."""

@@ -410,10 +410,6 @@ def score_resolve_fused(
         # Arrow-native kernel (applyInArrow): the id columns stay Arrow
         # buffers end-to-end — no object-string materialization, which was
         # ~40% of the per-task time under applyInPandas at 33.8M rows.
-        import os as _os
-        import time as _time
-        _trace = _os.environ.get("REFINED_SPARK_KERNEL_TRACE")
-        _t0 = _time.time()
         n = mtb.num_rows
         if n == 0:
             return out_schema.empty_table()
@@ -554,12 +550,6 @@ def score_resolve_fused(
             # path's null score for all-miss mentions
             "score": pa.array(sc, from_pandas=True),
         })
-        if _trace:
-            try:  # instrumentation must never fail the production job
-                with open(f"{_trace}/k_{_os.getpid()}.log", "a") as fh:
-                    fh.write(f"{n} {_time.time() - _t0:.3f}\n")
-            except OSError:
-                pass
         return out
 
     bucket = F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int")

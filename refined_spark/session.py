@@ -83,11 +83,7 @@ def get_spark(
             n_cores = int(inner)
 
     if shuffle_partitions is None:
-        env = os.environ.get("SPARK_GRAFT_SHUFFLE")
-        if env:
-            shuffle_partitions = int(env)
-        else:
-            shuffle_partitions = 3 * n_cores if scale_profile else n_cores
+        shuffle_partitions = 3 * n_cores if scale_profile else n_cores
 
     b = (
         SparkSession.builder.appName(app_name)

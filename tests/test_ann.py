@@ -141,7 +141,8 @@ def test_simhash_pairs_exact_recall(spark, doc_id):
     id_type, make_id = doc_id
     df = spark.createDataFrame(
         [(make_id(i), t) for i, t in enumerate(texts)]
-        + [(None, texts[4])],  # a null id pairs with nothing
+        + [(None, texts[4])]  # a null id pairs with nothing
+        + [(make_id(90), None), (make_id(91), None)],  # nor does a null text
         f"doc_id {id_type}, text string",
     )
     from pyspark.sql import functions as F
@@ -151,7 +152,7 @@ def test_simhash_pairs_exact_recall(spark, doc_id):
         for r in df.select(
             "doc_id", simhash_col(F.col("text"), 16).alias("sh")
         ).collect()
-        if r.doc_id is not None
+        if r.doc_id is not None and r.sh is not None
     }
     for radius in (0, 2, 4):
         expect = {

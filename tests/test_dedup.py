@@ -196,3 +196,74 @@ def test_simhash_hot_bucket_cap_bounds_degenerate_corpus(spark):
     capped = simhash_pairs(docs, radius=radius, bucket_cap=10, observation=obs)
     assert capped.count() == 0
     assert obs.get["simhash_dropped_bucket_rows"] == (radius + 1) * n
+
+
+@pytest.mark.parametrize("n_blocks", range(2, 9))
+def test_block_pair_ids_are_dense_and_decode(n_blocks):
+    """Every block pair (i <= j) gets a distinct id in [0, B(B+1)/2), and
+    the driver-side decode list maps the id back to (i, j)."""
+    from refined_spark.operators.dedup import _block_pairs, _pair_id
+
+    pairs = _block_pairs(n_blocks)
+    n_pairs = n_blocks * (n_blocks + 1) // 2
+    ids = {(i, j): _pair_id(i, j, n_blocks)
+           for i in range(n_blocks) for j in range(i, n_blocks)}
+    assert sorted(ids.values()) == list(range(n_pairs))
+    assert all(pairs[p] == ij for ij, p in ids.items())
+
+
+def test_block_pair_map_one_partition_per_pair(spark):
+    """The exchange runs one task per block pair: B(B+1)/2 partitions,
+    block pairs one-to-one onto partitions, none empty, and each task
+    holds exactly the rows of its two blocks."""
+    import pandas as pd
+    from pyspark import TaskContext
+
+    from refined_spark.operators.dedup import _block_pair_map, _n_blocks
+
+    nb = _n_blocks(spark)
+    rows = spark.range(200).select(F.col("id").alias("doc_id"))
+
+    def process(g, i, j):
+        return pd.DataFrame({
+            "i": [i], "j": [j], "part": [TaskContext.get().partitionId()],
+            "n": [len(g)], "foreign": [int((~g["blk"].isin([i, j])).sum())],
+        })
+
+    out = _block_pair_map(rows, process, "i int, j int, part int, n long, foreign long")
+    n_pairs = nb * (nb + 1) // 2
+    assert out.rdd.getNumPartitions() == n_pairs
+    got = out.collect()
+    per_block = dict(
+        rows.groupBy(F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int"))
+        .count().collect()
+    )
+    assert len(per_block) == nb  # every block holds docs
+    assert sorted(r.part for r in got) == list(range(n_pairs))
+    assert sorted((r.i, r.j) for r in got) == [
+        (i, j) for i in range(nb) for j in range(i, nb)
+    ]
+    for r in got:
+        assert r.foreign == 0
+        assert r.n == per_block[r.i] + (per_block[r.j] if r.j != r.i else 0)
+
+
+@pytest.mark.parametrize("op", ["lsh", "simhash"])
+def test_keyed_pairs_evaluate_the_key_kernel_once(spark, op):
+    """Bucket sizes come from the pass that computes the keys, so the
+    signature (SimHash) Arrow kernel appears once in the physical plan."""
+    from refined_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+        simhash_pairs,
+    )
+
+    d = _docs(spark, [("a", BASE), ("b", NEAR), ("c", OTHER)])
+    if op == "lsh":
+        df, out_col = lsh_candidate_pairs(minhash_signatures(d)), "sig#"
+    else:
+        df, out_col = simhash_pairs(d), "simhash#"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    kernels = [ln for ln in plan.splitlines()
+               if "MapInPandas" in ln and out_col in ln]
+    assert len(kernels) == 1, plan
