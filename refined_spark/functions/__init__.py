@@ -16,6 +16,5 @@ from refined_spark.functions.similarity import (  # noqa: F401
 from refined_spark.functions.hashing import (  # noqa: F401
     md5_hash64_col,
     char_shingles_col,
-    minhash_sig_col,
     simhash64_py,
 )

@@ -4,8 +4,11 @@ Everything here is reproducible in ANSI SQL (DuckDB oracle) because the base
 hash is md5-hex -> first 15 hex chars -> bigint, identical in Spark
 (`conv(substr(md5(x),1,15),16,10)`) and DuckDB
 (`('0x'||substr(md5(x),1,15))::BIGINT`). 15 hex chars < 2^60, so the value is
-positive and exact in both engines. MinHash permutations are the standard
-(a*h + b) mod p family with hardcoded seeded coefficients — no wall-clock, no
+positive and exact in both engines. MinHash uses the double-hash family
+g_i = (h1 + i*h2) & (2^60-1) over one md5 per shingle, computed by ONE
+batch-vectorized Arrow kernel (minhash_batch / minhash_table) that dedup
+and ER blocking share; minhash_sig_sql is its DuckDB twin and
+simhash64_py the pure-Python SimHash reference. No wall-clock, no
 unseeded rand anywhere (SURVEY.md §7.4.5).
 """
 
@@ -14,27 +17,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-MERSENNE_P = (1 << 61) - 1
-_SEED = 0x5EED_C0DE
-
 
 def _lcg(state: int) -> int:
     return (6364136223846793005 * state + 1442695040888963407) % (1 << 63)
-
-
-def minhash_coeffs(num_hashes: int, seed: int = _SEED) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs; a != 0 mod p."""
-    out = []
-    s = seed
-    while len(out) < num_hashes:
-        s = _lcg(s)
-        a = s % MERSENNE_P
-        s = _lcg(s)
-        b = s % MERSENNE_P
-        if a == 0:
-            continue
-        out.append((a, b))
-    return out
 
 
 def md5_hash64_col(c: Column) -> Column:
@@ -85,42 +70,88 @@ def split_tokens_col(c: Column) -> Column:
 
 
 MASK60 = (1 << 60) - 1
+MASK56 = (1 << 56) - 1
+MAX_MINHASH = 128
 
 
-def minhash_base_col(shingles: Column) -> Column:
-    """Per-shingle double hash from ONE md5: h1 = 60 bits (hex 1-15),
-    h2 = 56 bits (hex 16-29). Callers must materialize this in its own
-    select so Catalyst computes it once, not once per permutation."""
-    return F.transform(
-        shingles,
-        lambda s: F.struct(
-            F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(F.md5(s), 16, 14), 16, 10).cast("long").alias("h2"),
-        ),
+def minhash_batch(texts, k: int, num_hashes: int):
+    """MinHash signatures of one batch of strings (a pyarrow string array;
+    null -> null signature) as a pa.ListArray of int64.
+
+    Per row: the set of char k-shingles (a string of at most k chars is its
+    own single shingle, "" included); per shingle one md5, read as the
+    double hash h1 = hex chars 1-15 (digest bytes 0-7 >> 4, 60 bits) and
+    h2 = hex chars 16-29 ((bytes 7-14 >> 4) & 2^56-1); signature entry i is
+    min over the row's shingles of (h1 + i*h2) & (2^60-1). The whole batch
+    is one flat digest buffer: h1/h2 are one big-endian view each and every
+    permutation is one np.minimum.reduceat over the row segments, so the
+    per-row Python work is only the shingle set and its md5 calls.
+    Bit-exact with minhash_sig_sql (the DuckDB reference): the low 60 bits
+    of the sum do not depend on the wrap-around of the uint64 arithmetic."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow as pa
+
+    md5 = hashlib.md5
+    rows = texts.to_pylist()
+    valid = np.fromiter((s is not None for s in rows), dtype=bool, count=len(rows))
+    starts, digests = [], []
+    for s in rows:
+        if s is None:
+            continue
+        starts.append(len(digests))
+        n = len(s)
+        shingles = {s[:k]} if n <= k else {s[i:i + k] for i in range(n - k + 1)}
+        digests.extend(md5(sh.encode("utf-8")).digest() for sh in shingles)
+    sig = np.empty((len(starts), num_hashes), dtype=np.uint64)
+    if starts:
+        d = np.frombuffer(b"".join(digests), dtype=np.uint8).reshape(-1, 16)
+        h1 = np.ascontiguousarray(d[:, 0:8]).view(">u8").ravel() >> np.uint64(4)
+        h2 = (np.ascontiguousarray(d[:, 7:15]).view(">u8").ravel()
+              >> np.uint64(4)) & np.uint64(MASK56)
+        for i in range(num_hashes):
+            g = (h1 + np.uint64(i) * h2) & np.uint64(MASK60)
+            sig[:, i] = np.minimum.reduceat(g, starts)
+    offsets = np.zeros(len(rows) + 1, dtype=np.int32)
+    np.cumsum(valid * num_hashes, out=offsets[1:])
+    return pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(sig.view(np.int64).ravel()),
+        mask=pa.array(~valid),
     )
 
 
-def minhash_sig_from_base_col(base: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature via the standard double-hash family
-    g_i = (h1 + i*h2) & (2^60-1) — branch-free long arithmetic (no int128,
-    no per-permutation md5), exact in both Spark and DuckDB.
-    i*h2 <= 127*2^56 stays under 2^63, so no overflow for num_hashes<=128.
-    min over the multiset equals min over the set, so no array_distinct."""
-    if num_hashes > 128:
-        raise ValueError("num_hashes > 128 would overflow the long domain")
+def minhash_table(df, text_col: str, k: int, num_hashes: int, keep: list):
+    """(*keep, sig array<bigint>[num_hashes]): the MinHash signature of the
+    char-k-shingles of ``text_col``, one Arrow batch per minhash_batch call
+    (mapInArrow). The one MinHash kernel of the engine: dedup's document
+    signatures and the blocking channel's banding both run it.
 
-    def g(i: int):
-        return lambda b: (b["h1"] + F.lit(i) * b["h2"]).bitwiseAND(F.lit(MASK60))
+    num_hashes is capped at MAX_MINHASH when the plan is built: the DuckDB
+    twin computes i*h2 in BIGINT, and i*h2 <= 127*2^56 stays under 2^63.
+    (Its sum h1 + i*h2 can still overflow BIGINT from i = 113 on; the
+    kernel's uint64 arithmetic cannot.)"""
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    return F.array(
-        *[F.array_min(F.transform(base, g(i))) for i in range(num_hashes)]
+    if num_hashes > MAX_MINHASH:
+        raise ValueError(
+            f"num_hashes={num_hashes} > {MAX_MINHASH} would overflow the long domain"
+        )
+    schema = StructType(
+        [df.schema[c] for c in keep] + [StructField("sig", ArrayType(LongType()))]
     )
 
+    def kernel(batches):
+        import pyarrow as pa
 
-def minhash_sig_col(shingles: Column, num_hashes: int = 32, seed: int = _SEED) -> Column:
-    """One-shot variant (recomputes the base per permutation — prefer
-    minhash_base_col + minhash_sig_from_base_col across two selects)."""
-    return minhash_sig_from_base_col(minhash_base_col(shingles), num_hashes)
+        for b in batches:
+            yield pa.RecordBatch.from_arrays(
+                [b.column(c) for c in keep]
+                + [minhash_batch(b.column(text_col), k, num_hashes)],
+                names=[*keep, "sig"],
+            )
+
+    return df.mapInArrow(kernel, schema)
 
 
 def minhash_sig_sql(shingles_sql: str, num_hashes: int = 32) -> str:
@@ -140,8 +171,8 @@ def minhash_sig_sql(shingles_sql: str, num_hashes: int = 32) -> str:
 
 def simhash64_py(tokens: list[str], num_bits: int = 64) -> int:
     """SimHash over a token list — the pure-Python reference kernel,
-    bit-exact with the JVM plan (operators/dedup.simhash_col) and the
-    DuckDB oracle (queries._sql_simhash): per-token hash = md5 hex 1-15
+    bit-exact with the engine's Arrow kernel (operators/dedup.simhash_table)
+    and the DuckDB oracle (queries._sql_simhash): per-token hash = md5 hex 1-15
     (bits 0-59) + hex char 16 (bits 60-63); bit b of the output is the
     majority vote of bit b. Returned as a SIGNED 64-bit value (bit 63 set
     => negative), matching the long/BIGINT representation both engines
@@ -170,8 +201,6 @@ def band_hashes_col(sig: Column, bands: int, num_hashes: int) -> Column:
     Shared by the dedup channel (dedup.lsh_candidate_pairs) and the
     blocking channel (banded_rows) so the band-key definition can
     never drift between them."""
-    from pyspark.sql import functions as F
-
     rows_per_band = (num_hashes // bands) or 1
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -182,19 +211,16 @@ def band_hashes_col(sig: Column, bands: int, num_hashes: int) -> Column:
 
 
 def banded_rows(df, text_col: str, k: int, num_hashes: int, bands: int):
-    """+ (band_id, band_hash) per input row, one row per band, from a
-    MinHash signature of the char-k-shingles of ``text_col``. The blocking
-    channel bands both sides with it: the mention keys per run and the
-    dictionary surfaces once per dictionary (pem.banded_surfaces)."""
-    base = df.withColumn(
-        "_mh_base", minhash_base_col(char_shingles_col(F.col(text_col), k))
-    )
-    sig = base.withColumn(
-        "_sig", minhash_sig_from_base_col(F.col("_mh_base"), num_hashes)
-    ).drop("_mh_base")
+    """+ (band_id, band_hash) per input row, one row per band, from the
+    MinHash signature (minhash_table) of the char-k-shingles of
+    ``text_col``. The blocking channel bands both sides with it: the
+    mention keys per run and the dictionary surfaces once per dictionary
+    (pem.banded_surfaces). A null ``text_col`` gets null band hashes, which
+    join nothing."""
+    sig = minhash_table(df, text_col, k, num_hashes, df.columns)
     return sig.select(
-        "*",
+        *df.columns,
         F.posexplode(
-            band_hashes_col(F.col("_sig"), bands, num_hashes)
+            band_hashes_col(F.col("sig"), bands, num_hashes)
         ).alias("band_id", "band_hash"),
-    ).drop("_sig")
+    )

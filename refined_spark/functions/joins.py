@@ -7,39 +7,18 @@ on any table that scales with the corpus, dictionary, or entity set
 dictionary is ~18M x 30 rows; banded LSH surfaces are |surfaces| x bands)
 OOMs every executor at 100x. Policy:
 
-  broadcast_dim(df)   — TRUE dimension tables whose size is bounded by the
-                        schema, not the data (nation/region, the
-                        human-qcode set, a user's ANN query set): keep the
-                        plan-time hint; it saves AQE a stats round-trip and
-                        can never blow up.
-  maybe_broadcast(df) — everything else: NO hint. Catalyst's size estimate
-                        auto-broadcasts under autoBroadcastJoinThreshold,
-                        and AQE upgrades shuffle joins to broadcast at
-                        runtime from OBSERVED sizes (localShuffleReader, no
-                        extra shuffle) — so small-scale runs keep broadcast
-                        performance while 100x runs degrade gracefully to
-                        shuffled hash / sort-merge instead of OOM.
-                        REFINED_SPARK_FORCE_BROADCAST=1 restores the hard
-                        hint everywhere for A/B plan comparisons.
+  - TRUE dimension tables whose size is bounded by the schema, not the
+    data (nation/region, the human-qcode set, a user's ANN query set) get
+    F.broadcast at the join site: it saves AQE a stats round-trip and can
+    never blow up.
+  - Everything else joins with NO hint. Catalyst's size estimate
+    auto-broadcasts under autoBroadcastJoinThreshold, and AQE upgrades
+    shuffle joins to broadcast at runtime from OBSERVED sizes
+    (localShuffleReader, no extra shuffle) — so small-scale runs keep
+    broadcast performance while 100x runs degrade gracefully to shuffled
+    hash / sort-merge instead of OOM.
 
 The non-broadcast path is exercised by tests/test_pipeline_e2e.py with
-spark.sql.autoBroadcastJoinThreshold=-1 (forces every maybe_broadcast join
-to its shuffle form) asserting the e2e F1 gate still holds.
+spark.sql.autoBroadcastJoinThreshold=-1 (forces every unhinted join to its
+shuffle form) asserting the e2e F1 gate still holds.
 """
-
-from __future__ import annotations
-
-import os
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def broadcast_dim(df: DataFrame) -> DataFrame:
-    return F.broadcast(df)
-
-
-def maybe_broadcast(df: DataFrame) -> DataFrame:
-    if os.environ.get("REFINED_SPARK_FORCE_BROADCAST") == "1":
-        return F.broadcast(df)
-    return df

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from refined_spark.functions.hashing import _lcg
-from refined_spark.functions.joins import broadcast_dim
 from refined_spark.functions.similarity import dot_col, l2_norm_col, round6_half_up
 
 
@@ -46,7 +45,7 @@ def cosine_topk_bruteforce(
     v = vectors.select(F.col(id_col).alias("vec_id"), F.col(emb_col).alias("v_emb"))
     # the query set is a user-provided small dim (bounded by the caller,
     # not the corpus) — a plan-time broadcast hint is safe by contract
-    scored = v.crossJoin(broadcast_dim(q)).select(
+    scored = v.crossJoin(F.broadcast(q)).select(
         "query_id",
         "vec_id",
         F.round(
@@ -155,7 +154,7 @@ def cosine_topk_lsh(
             lsh_probe_buckets_col(F.col(emb_col), planes, probes)
         ).alias("bucket"),
     )
-    scored = v.join(broadcast_dim(q), "bucket").select(
+    scored = v.join(F.broadcast(q), "bucket").select(
         "query_id",
         "vec_id",
         F.round(
@@ -215,7 +214,7 @@ def ivf_topk(
     def assign(df: DataFrame, df_id: str, keep: int) -> DataFrame:
         scored = (
             df.select(F.col(df_id).alias("_id"), F.col(emb_col).alias("emb"))
-            .crossJoin(broadcast_dim(cent))
+            .crossJoin(F.broadcast(cent))
             .select("_id", "emb", "cent_id", cos_to_cent.alias("ccos"))
         )
         return (
@@ -230,7 +229,7 @@ def ivf_topk(
     q = assign(queries, query_id_col, n_probe).select(
         F.col("_id").alias("query_id"), F.col("emb").alias("q_emb"), "cell"
     )
-    scored = v.join(broadcast_dim(q), "cell").select(
+    scored = v.join(F.broadcast(q), "cell").select(
         "query_id",
         "vec_id",
         F.round(

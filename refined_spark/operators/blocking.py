@@ -21,8 +21,11 @@ outside a shared band):
     common shingle patterns) are bounded by band width, and the band key
     can be salted exactly like the alias key if a real corpus degenerates.
 
-Determinism: the md5-based MinHash family from functions/hashing.py — no
-RNG state anywhere (SURVEY.md §7.4.5).
+Signatures come from the engine's one MinHash kernel
+(hashing.minhash_table, the mapInArrow that dedup's document signatures
+also run); band keys are hashing.band_hashes_col, the same definition
+dedup bands with. Determinism: the md5-based MinHash family from
+functions/hashing.py — no RNG state anywhere (SURVEY.md §7.4.5).
 """
 
 from __future__ import annotations
@@ -83,7 +86,6 @@ def lsh_candidate_join(
 
     No broadcast hints: banded surfaces are |surfaces| x bands rows and the
     flat dictionary is dictionary-scale — AQE decides (functions/joins.py)."""
-    from refined_spark.functions.joins import maybe_broadcast
     from refined_spark.operators import pem as pem_ops
 
     flat = pem_ops.dictionary(pem, entity_meta).select(
@@ -95,13 +97,13 @@ def lsh_candidate_join(
     # banding and the Jaccard verify are functions of the BLOCK KEY alone,
     # so they run once per distinct key, not once per mention: mentions
     # sharing a key (common on real corpora and ~2x on the bench tail)
-    # would otherwise each pay the signature chain, the band join AND the
+    # would otherwise each pay the signature kernel, the band join AND the
     # per-pair shingle intersect. Verified (block_key, surface) pairs
     # rejoin the mention set afterwards — the same (mention, surface)
     # pair set as banding every mention row, by construction.
     # explicit repartition after the distinct: AQE coalesces the few-MB
-    # key exchange to ~1 partition by bytes, which would run the whole
-    # signature chain for every key on one core (the round-6 pattern:
+    # key exchange to ~1 partition by bytes, which would run the signature
+    # kernel for every key on one core (the round-6 pattern:
     # expensive compute downstream of a tiny exchange needs explicit
     # width, not byte-derived width)
     keys = (
@@ -111,7 +113,7 @@ def lsh_candidate_join(
     k_banded = banded_rows(keys, "block_key", k, num_hashes, bands)
 
     key_pairs = (
-        k_banded.join(maybe_broadcast(s_banded), ["band_id", "band_hash"])
+        k_banded.join(s_banded, ["band_id", "band_hash"])
         .select("block_key", "surface_form")
         .distinct()
     )
@@ -126,7 +128,7 @@ def lsh_candidate_join(
     )
     verified = mentions.join(verified_keys, "block_key")
 
-    cand = verified.join(maybe_broadcast(flat), "surface_form")
+    cand = verified.join(flat, "surface_form")
     extra = ["prior", "rank"]
     best = F.max_by(
         F.struct(*[F.col(c) for c in extra]),

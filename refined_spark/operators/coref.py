@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from refined_spark.config import COREF_CAP, COREF_FLOOR
-from refined_spark.functions.joins import broadcast_dim
 from refined_spark.functions.similarity import jaro_winkler_py, lev_sim_py
 
 _MENTION = ["doc_id", "mention_id", "block_key", "offset"]
@@ -62,7 +61,7 @@ def propagate_person_coref(
     cols = _MENTION + ["qcode", "prior"] + feat
     n = int(candidates.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     candidates = candidates.select(*cols)
-    humans = broadcast_dim(human_qcodes).select("qcode")
+    humans = F.broadcast(human_qcodes).select("qcode")
     rows = candidates.repartition(n, "doc_id").withColumn(
         "human", F.col("qcode").isin(humans))
     if feat:
@@ -70,7 +69,7 @@ def propagate_person_coref(
 
         # as small as the human set itself, so it broadcasts like it
         labels = normalized_labels(entity_meta).join(humans, "qcode", "left_semi")
-        rows = rows.join(broadcast_dim(labels), "qcode", "left")
+        rows = rows.join(F.broadcast(labels), "qcode", "left")
     return rows.sortWithinPartitions("doc_id").mapInPandas(
         partial(_merge_docs, cols=cols), candidates.schema
     )

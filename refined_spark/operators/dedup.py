@@ -10,9 +10,12 @@ Scale notes:
   - exact dedup: one hash aggregate on the content hash; at 100 TB prefer
     hashing first, then groupBy the 8-byte hash (tiny shuffle payload) —
     that is exactly what these plans do (never shuffle full text).
-  - MinHash-LSH: signatures come from an Arrow kernel (mapInPandas: one
-    md5 per distinct shingle, one vectorized min per permutation); banding
-    posexplodes them to (band_id, band_hash) keys.
+  - MinHash-LSH: signatures come from the engine's one MinHash kernel
+    (hashing.minhash_table: mapInArrow, one md5 per distinct shingle, one
+    vectorized min per permutation over the whole batch), shared with ER
+    blocking; banding posexplodes them to (band_id, band_hash) keys.
+  - SimHash: one Arrow kernel (simhash_table), bit-exact with
+    hashing.simhash64_py and the DuckDB oracle.
   - pairs: LSH buckets, SimHash pigeonhole pieces and n-gram postings all
     emit pairs through ONE block-pair kernel (see the comment above
     _n_blocks): rows replicate to B block-pair tasks, each task emits,
@@ -41,7 +44,7 @@ from pyspark.sql import functions as F
 from refined_spark.functions.hashing import (
     char_shingles_col,
     md5_hash64_col,
-    minhash_sig_col,
+    minhash_table,
 )
 from refined_spark.operators.clustering import connected_components
 
@@ -313,54 +316,18 @@ def exact_duplicates(documents: DataFrame, id_col: str = "doc_id",
 
 def minhash_signatures(documents: DataFrame, k: int = 5, num_hashes: int = 32,
                        text_col: str = "text") -> DataFrame:
-    """(doc_id, sig array<long>[num_hashes]) over char k-shingles.
+    """(doc_id, sig array<long>[num_hashes]) over the char k-shingles of
+    the normalized text.
 
     Text normalization stays a JVM builtin (so lower/trim/\\s+ semantics
-    can never drift from the rest of the engine); the shingle loop, md5
-    and the (h1 + i*h2) & MASK60 permutation family run in an Arrow
-    kernel — hashlib.md5 over the raw digest bytes plus one vectorized
-    min per permutation. Byte-for-byte the same signature longs as the
-    previous conv(substr(md5...)) expression tree (md5 is md5; hex chars
-    1-15 == digest bytes 0-7 >> 4, hex 16-29 == (bytes 7-14 >> 4) & 2^56-1,
-    all integer math), which paid one interpreted higher-order-function
-    transform per permutation plus Spark's notoriously slow conv()."""
-    import numpy as np
-    import pandas as pd
-
-    from refined_spark.functions.hashing import MASK60
-
-    mask56 = (1 << 56) - 1
-
-    def kernel(batches):
-        import hashlib
-
-        md5 = hashlib.md5
-        from_bytes = int.from_bytes
-
-        for pdf in batches:
-            sigs: list = []
-            for s in pdf["__norm"]:
-                if s is None:
-                    sigs.append(None)
-                    continue
-                n = len(s)
-                shingles = {s[:k]} if n <= k else {
-                    s[i:i + k] for i in range(n - k + 1)
-                }
-                h1 = np.empty(len(shingles), dtype=np.int64)
-                h2 = np.empty(len(shingles), dtype=np.int64)
-                for idx, sh in enumerate(shingles):
-                    dg = md5(sh.encode("utf-8")).digest()
-                    h1[idx] = from_bytes(dg[:8], "big") >> 4
-                    h2[idx] = (from_bytes(dg[7:15], "big") >> 4) & mask56
-                sigs.append([int(np.min((h1 + i * h2) & MASK60))
-                             for i in range(num_hashes)])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "sig": sigs})
-
-    id_t = documents.schema["doc_id"].dataType.simpleString()
-    return documents.select(
+    can never drift from the rest of the engine); the shingles, md5 and the
+    (h1 + i*h2) & MASK60 permutation family run in the shared MinHash
+    kernel (hashing.minhash_table), which raises for num_hashes > 128 when
+    the plan is built."""
+    norm = documents.select(
         "doc_id", normalized_text_col(F.col(text_col)).alias("__norm")
-    ).mapInPandas(kernel, schema=f"doc_id {id_t}, sig array<bigint>")
+    )
+    return minhash_table(norm, "__norm", k, num_hashes, ["doc_id"])
 
 
 def lsh_candidate_pairs(
@@ -472,85 +439,20 @@ def near_dup_clusters(
     )
 
 
-def simhash_col(text: Column, num_bits: int = 64) -> Column:
-    """SimHash over word tokens, JVM-side, up to the full 64-bit width
-    (default 64: a 16-bit space is collision-dominated past ~10^6 docs —
-    birthday pairs at 65k buckets — so "same hash" stops meaning near-dup
-    on any web-scale corpus; 2^64 pushes that past 10^9).
-
-    Per-token 64-bit hash = md5 hex chars 1-15 (bits 0-59, the engine-wide
-    60-bit base hash) + hex char 16 (bits 60-63) — both exact BIGINTs in
-    Spark and DuckDB. Bit b of the output is the majority vote of bit b
-    across the token hashes. Single pass over the token array: one
-    `aggregate` carries the num_bits vote counters as an int array
-    (zip_with accumulator), then one fold converts votes to bits. Measured
-    4x faster than the per-bit-aggregate formulation at 64 bits (each
-    per-bit aggregate re-traverses the token array) and on par with the old
-    16-bit plan. Bit 63 is the long sign bit: adding -2^63 IS setting it in
-    two's complement (no unsigned type in either engine), so hashes with
-    bit 63 set are negative longs — xor/bit_count/shift+mask all behave
-    identically on them in Spark and DuckDB.
-
-    Bit-exact twin of functions/hashing.simhash64_py (the pure-Python
-    kernel used by the property tests) and of queries._sql_simhash."""
-    if not 1 <= num_bits <= 64:
-        raise ValueError(f"num_bits={num_bits} outside [1, 64]")
-    toks = F.split(normalized_text_col(text), " ")
-    hs = F.transform(
-        toks,
-        lambda t: F.struct(
-            F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(F.md5(t), 16, 1), 16, 10).cast("long").alias("h2"),
-        ),
-    )
-
-    # Constant array of per-bit masks (m1 hits h1 for bits 0-59, m2 hits h2
-    # for bits 60-63; exactly one is nonzero per entry). Constant-folded to
-    # ONE literal, so the vote loop compiles to a single zip_with body —
-    # the previous formulation unrolled num_bits shiftright/and/cast
-    # expressions inside the aggregate lambda and at 64 bits the generated
-    # Java method crossed janino's 64 KB ceiling, dropping the whole
-    # projection out of whole-stage codegen into interpreted mode.
-    masks = F.array(*[
-        F.struct(
-            F.lit((1 << b) if b < 60 else 0).cast("long").alias("m1"),
-            F.lit(0 if b < 60 else (1 << (b - 60))).cast("long").alias("m2"),
-        )
-        for b in range(num_bits)
-    ])
-    votes = F.aggregate(
-        hs,
-        F.array_repeat(F.lit(0), num_bits),
-        lambda acc, s: F.zip_with(
-            acc,
-            masks,
-            lambda a, m: a + F.when(
-                (s["h1"].bitwiseAND(m["m1"]) != 0)
-                | (s["h2"].bitwiseAND(m["m2"]) != 0),
-                1,
-            ).otherwise(-1),
-        ),
-    )
-    powers = [(1 << b) if b < 63 else -(1 << 63) for b in range(num_bits)]
-    pw = F.array(*[F.lit(p).cast("long") for p in powers])
-    return F.aggregate(
-        F.zip_with(
-            votes, pw, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))
-        ),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-
-
 def simhash_table(documents: DataFrame, num_bits: int = 64,
                   text_col: str = "text") -> DataFrame:
-    """(doc_id, simhash) via an Arrow kernel — bit-exact with simhash_col
-    and hashing.simhash64_py (same md5, same majority vote, same signed
-    bit-63 representation), without the interpreted zip_with vote loop
-    that pays ~num_bits lambda evaluations per token. Normalization stays
-    JVM-side like minhash_signatures; the kernel unpacks each token's
-    64-bit hash (md5 hex 1-15 -> bits 0-59, hex 16 -> bits 60-63) with
-    one np.unpackbits per doc and takes the per-bit majority."""
+    """(doc_id, simhash) over word tokens via an Arrow kernel, up to the
+    full 64-bit width (default 64: a 16-bit space is collision-dominated
+    past ~10^6 docs — birthday pairs at 65k buckets — so "same hash" stops
+    meaning near-dup on any web-scale corpus; 2^64 pushes that past 10^9).
+
+    Bit-exact with hashing.simhash64_py and the DuckDB oracle
+    queries._sql_simhash: same md5, same majority vote, same signed bit-63
+    representation (hashes with bit 63 set are negative longs).
+    Normalization stays JVM-side like minhash_signatures; the kernel
+    unpacks each token's 64-bit hash (md5 hex 1-15 -> bits 0-59, hex 16 ->
+    bits 60-63) with one np.unpackbits per doc and takes the per-bit
+    majority."""
     import numpy as np
     import pandas as pd
 
@@ -592,18 +494,6 @@ def simhash_table(documents: DataFrame, num_bits: int = 64,
     return documents.select(
         "doc_id", normalized_text_col(F.col(text_col)).alias("__norm")
     ).mapInPandas(kernel, schema=f"doc_id {id_t}, simhash bigint")
-
-
-def simhash_near_dups(documents: DataFrame, num_bits: int = 64,
-                      text_col: str = "text") -> DataFrame:
-    """Docs whose SimHash is identical (bucket grouping — the scalable
-    hamming-radius-0 variant; radius>0 would probe bit-flipped buckets)."""
-    h = documents.select("doc_id", simhash_col(F.col(text_col), num_bits).alias("simhash"))
-    return (
-        h.groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
-        .where(F.col("n_docs") > 1)
-    )
 
 
 def simhash_pairs(documents: DataFrame, num_bits: int = 64, radius: int = 3,

@@ -73,8 +73,6 @@ def gold_recall(gold_spans: DataFrame, candidates: DataFrame) -> DataFrame:
     candidates: (mention_id, qcode) one row per candidate.
     Returns one row: (n_gold, n_gold_in_candidates, gold_recall).
     Plan: one semi-join + two counts folded into a single aggregate."""
-    from refined_spark.functions.joins import maybe_broadcast
-
     g = gold_spans.select("mention_id", F.col("qcode").alias("gold_qcode"))
     # semi-join direction flipped vs the naive g ⋉ candidates: a left-semi
     # can only build its RIGHT side, so the old orientation forced the
@@ -85,13 +83,13 @@ def gold_recall(gold_spans: DataFrame, candidates: DataFrame) -> DataFrame:
     # contract): hit mentions = {m : (m, gold_qcode(m)) ∈ candidates}.
     hit = (
         candidates.select("mention_id", F.col("qcode").alias("gold_qcode"))
-        .join(maybe_broadcast(g), ["mention_id", "gold_qcode"], "left_semi")
+        .join(g, ["mention_id", "gold_qcode"], "left_semi")
         .select("mention_id")
         .distinct()
         .withColumn("in_cands", F.lit(1))
     )
     return (
-        g.join(maybe_broadcast(hit), "mention_id", "left")
+        g.join(hit, "mention_id", "left")
         .agg(
             F.count(F.lit(1)).alias("n_gold"),
             F.coalesce(F.sum("in_cands"), F.lit(0)).alias("n_gold_in_candidates"),

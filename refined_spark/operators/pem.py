@@ -207,12 +207,11 @@ def string_features(df: DataFrame, key_col: str, entity_meta: DataFrame) -> Data
     entity has no label). Levenshtein is Spark's builtin (JVM/codegen);
     only JW needs the Arrow UDF. North rule: 'batched
     Jaro-Winkler/Levenshtein'."""
-    from refined_spark.functions.joins import maybe_broadcast
     from refined_spark.functions.similarity import jaro_winkler_udf, lev_sim_col
 
     lbl = F.coalesce(F.col("norm_label"), F.lit(""))
     return (
-        df.join(maybe_broadcast(normalized_labels(entity_meta)), "qcode", "left")
+        df.join(normalized_labels(entity_meta), "qcode", "left")
         .withColumn("jw", jaro_winkler_udf(F.col(key_col), lbl))
         .withColumn("lev", lev_sim_col(F.col(key_col), lbl))
         .drop("norm_label")
@@ -298,11 +297,9 @@ def candidate_join(
     With entity_meta, the jaro-winkler feature rides in on the indexed
     dictionary (see dictionary) so scoring needs no separate string-kernel
     pass."""
-    from refined_spark.functions.joins import maybe_broadcast
-
     flat = dictionary(pem, entity_meta)
     return mentions.join(
-        maybe_broadcast(flat),
+        flat,
         mentions["block_key"] == flat["surface_form"],
         "left",
     ).drop("surface_form")

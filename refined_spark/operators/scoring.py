@@ -41,7 +41,6 @@ from pyspark.sql.types import ArrayType, DoubleType
 
 from refined_spark.config import ED_THRESHOLD, W_COS, W_JW, W_LEV, W_PRIOR
 from refined_spark.fixtures import hash_embed_batch
-from refined_spark.functions.joins import maybe_broadcast
 from refined_spark.functions.similarity import cosine_seq_udf
 from refined_spark.operators import pem
 
@@ -230,10 +229,8 @@ def score_candidates(
     corpus-sized distinct pairs — a hard hint is not demotable and OOMs at
     100x (functions/joins.py policy); AQE still broadcasts them at sandbox
     scale from observed sizes."""
-    emb = maybe_broadcast(
-        entity_embeddings.select(
-            "qcode", F.col("emb").cast("array<double>").alias("ent_emb")
-        )
+    emb = entity_embeddings.select(
+        "qcode", F.col("emb").cast("array<double>").alias("ent_emb")
     )
     # per-mention windows (C1) join on mention_id; a doc-level ctx frame
     # (no mention_id column) still works and joins on doc_id
@@ -254,7 +251,7 @@ def score_candidates(
             "block_key", "qcode", "jw", "lev"
         )
         scored = (
-            candidates.join(maybe_broadcast(jw_tbl), ["block_key", "qcode"], "left")
+            candidates.join(jw_tbl, ["block_key", "qcode"], "left")
             .join(emb, "qcode", "left")
             .join(ctx_emb, ctx_key, "left")
         )
@@ -339,7 +336,7 @@ def score_resolve_fused(
         fold the oracle uses), collected once per entity table as a part
         of the dictionary index (pem.entity_matrix) — guarded by
         EMB_BROADCAST_MAX_BYTES, the same size-aware policy as
-        functions/joins.maybe_broadcast;
+        functions/joins.py;
       - cosine accumulates dimension-by-dimension (vectorized across rows)
         — bit-identical to cosine_seq_udf and the oracle's seq_dot;
       - the C5 argmax + P7 threshold run inside the kernel (every

@@ -225,7 +225,6 @@ def q_candidate_join(spark, sf_dir):
         .where(F.col("token") != "")
         .distinct()
     )
-    from refined_spark.functions.joins import maybe_broadcast
 
     # the argmax depends only on the token, so it collapses on the
     # dictionary side BEFORE the join: the old plan joined every mention
@@ -241,7 +240,7 @@ def q_candidate_join(spark, sf_dir):
         ).alias("best")
     )
     joined = mentions.join(
-        maybe_broadcast(best_per_surface),
+        best_per_surface,
         mentions["token"] == best_per_surface["surface_form"],
         "left",
     )
@@ -645,9 +644,9 @@ WHERE a.doc_id < b.doc_id
 
 
 def q_simhash(spark, sf_dir):
-    """SimHash document fingerprints at the full 64-bit width (single-pass
-    majority vote, JVM-side — see dedup.simhash_col for why 16-bit hashes
-    stop discriminating past ~10^6 docs)."""
+    """SimHash document fingerprints at the full 64-bit width (per-bit
+    majority vote in dedup.simhash_table's Arrow kernel — see its docstring
+    for why 16-bit hashes stop discriminating past ~10^6 docs)."""
     d = spread_scan(_t(spark, sf_dir, "documents"))
     return dedup.simhash_table(d, num_bits=64)
 
@@ -1494,11 +1493,9 @@ def q_gold_recall(spark, sf_dir):
     # affect the result — constraining the dictionary join to the doc's
     # gold qcode up front skips the ~25x candidate row explosion while
     # producing the identical hit set (and n_gold comes from `gold`).
-    from refined_spark.functions.joins import maybe_broadcast
-
     gt = d.select("doc_id", F.col("source").alias("gold_qcode"))
     cands = (
-        mentions.join(maybe_broadcast(gt), "doc_id")
+        mentions.join(gt, "doc_id")
         .join(
             flat,
             (mentions["token"] == flat["surface_form"])

@@ -36,7 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from refined_spark.functions.joins import broadcast_dim, maybe_broadcast
 from refined_spark.functions.normalize import title_to_key_col
 from refined_spark.operators.spans import merge_spans_overlap
 from refined_spark.sources.dumps import title_with_redirects
@@ -112,7 +111,7 @@ def clean_anchor_links(
     out = mapped.where(F.col("qcode").isNotNull())
     if disambiguation_qcodes is not None:
         out = out.join(
-            broadcast_dim(disambiguation_qcodes.select("qcode")),
+            F.broadcast(disambiguation_qcodes.select("qcode")),
             "qcode", "left_anti",
         )
     return out.select("doc_id", "title", "surface_form", "start", "end", "qcode")
@@ -142,10 +141,10 @@ def weak_label_main_entity(
     main = (
         title_with_redirects(pages, redirects, wiki_to_qcode, title_col="title")
         .where(F.col("qcode").isNotNull())
-        .join(maybe_broadcast(entity_meta.select("qcode", "label")), "qcode")
+        .join(entity_meta.select("qcode", "label"), "qcode")
         .withColumn("main_label", F.replace("label", F.lit("'s"), F.lit("")))
         .where(F.length("main_label") > 2)
-        .join(broadcast_dim(humans), "qcode", "left")
+        .join(F.broadcast(humans), "qcode", "left")
         .withColumn(
             # humans match on any single name token too ("Joe", "Biden"
             # for "Joe Biden" — wikipedia_dataset.py:248-252)

@@ -7,17 +7,23 @@ offers TWO incremental paths:
 
 1. `incremental_resolve` — the Iceberg-style pattern: new document files
    land in a directory; Structured Streaming's file source discovers them,
-   and foreachBatch runs the SAME batch pipeline per micro-batch, appending
-   to the resolved output snapshot. Exactly-once comes from the streaming
-   checkpoint + idempotent per-batch writes.
+   and foreachBatch runs the SAME batch pipeline per micro-batch and
+   appends its output (`mode("append")`) to the resolved output. The
+   streaming checkpoint records which files were processed; the write is
+   not idempotent: a batch replayed after a crash between its write and
+   the checkpoint commit appends its rows a second time.
 
 2. `StageStore` (plans/snapshots.py) — stage-level resume for the offline
    ETL, mirroring the reference's checkpointing.
 
-Clustering is NOT incremental here: winner-entity clusters only need the
-resolved table, so cluster ids stay stable under appends (cluster key =
-entity anchor); near-dup CC would re-run per snapshot — the standard
-batch-refresh pattern for iterative graph jobs.
+Clustering is NOT incremental here: each micro-batch labels its clusters
+from its own mentions (`least(min xxhash64(mention_id), xxhash64("ENT:",
+qcode))` over that batch only), so one entity gets one cluster_id per
+batch and the appended ids differ from a batch recompute (on
+q_incremental_resolve's inputs, 25 of 30 linked entities carried two ids).
+Merging the per-entity minimum across batches, and overwriting per
+batch_id, is ROADMAP Direction 1. Near-dup CC would re-run per snapshot —
+the standard batch-refresh pattern for iterative graph jobs.
 """
 
 from __future__ import annotations

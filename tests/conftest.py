@@ -30,3 +30,31 @@ def fixture_paths(tmp_path_factory):
 @pytest.fixture(scope="session")
 def tables(spark, fixture_paths):
     return {k: spark.read.parquet(v) for k, v in fixture_paths.items()}
+
+
+@pytest.fixture(scope="session")
+def minhash_sql():
+    """The MinHash reference: hashing.minhash_sig_sql evaluated in DuckDB
+    over char k-shingle lists built in Python (a text of at most k chars
+    is its own shingle; None text -> None signature)."""
+    import duckdb
+    import pyarrow as pa
+
+    from refined_spark.functions.hashing import minhash_sig_sql
+
+    con = duckdb.connect()
+
+    def signatures(texts, k: int, num_hashes: int) -> list:
+        sh = [None if t is None
+              else [t[i:i + k] for i in range(max(len(t) - k + 1, 1))]
+              for t in texts]
+        t = pa.table({"i": pa.array(range(len(sh)), pa.int64()),
+                      "sh": pa.array(sh, pa.list_(pa.string()))})
+        con.register("shingles", t)
+        rows = con.execute(
+            f"SELECT {minhash_sig_sql('sh', num_hashes)} FROM shingles ORDER BY i"
+        ).fetchall()
+        con.unregister("shingles")
+        return [None if s is None else list(r[0]) for s, r in zip(sh, rows)]
+
+    return signatures

@@ -128,7 +128,7 @@ def test_simhash_pairs_exact_recall(spark, doc_id):
     """Pigeonhole blocking is lossless: simhash_pairs == brute-force pairs
     within the hamming radius (including radius 0 and the degenerate
     identical-doc case), for long and for string doc ids."""
-    from refined_spark.operators.dedup import simhash_col, simhash_pairs
+    from refined_spark.operators.dedup import simhash_pairs, simhash_table
 
     texts = [
         "the quick brown fox jumps over the lazy dog",
@@ -145,14 +145,10 @@ def test_simhash_pairs_exact_recall(spark, doc_id):
         + [(make_id(90), None), (make_id(91), None)],  # nor does a null text
         f"doc_id {id_type}, text string",
     )
-    from pyspark.sql import functions as F
-
     hashes = {
-        r.doc_id: r.sh
-        for r in df.select(
-            "doc_id", simhash_col(F.col("text"), 16).alias("sh")
-        ).collect()
-        if r.doc_id is not None and r.sh is not None
+        r.doc_id: r.simhash
+        for r in simhash_table(df, num_bits=16).collect()
+        if r.doc_id is not None and r.simhash is not None
     }
     for radius in (0, 2, 4):
         expect = {

@@ -81,3 +81,31 @@ def test_pipeline_lsh_blocking_invariant_on_clean_corpus(spark, fixture_paths):
     base = pipeline.run(spark, *args).select("mention_id", "qcode")
     fuzzy = pipeline.run(spark, *args, lsh_blocking=True).select("mention_id", "qcode")
     assert base.exceptAll(fuzzy).isEmpty() and fuzzy.exceptAll(base).isEmpty()
+
+
+def test_lsh_empty_and_null_keys(spark):
+    """An empty block key is one shingle ("") and bands like any other
+    key; a null block key bands to null hashes and pairs with nothing,
+    not even a null surface. Rows as the JVM signature chain gave them."""
+    d = spark.createDataFrame(
+        [
+            ("angela merkel", [{"qcode": "Q1", "prior": 0.9}]),
+            ("", [{"qcode": "Q9", "prior": 0.5}]),
+            (None, [{"qcode": "Q8", "prior": 0.4}]),
+        ],
+        "surface_form string, candidates array<struct<qcode string, prior double>>",
+    )
+    m = spark.createDataFrame(
+        [
+            ("d4", "d4#0", "", 0),
+            ("d4", "d4#1", None, 1),
+            ("d4", "d4#2", "angela merkle", 2),
+            ("d4", "d4#3", "an", 3),
+        ],
+        "doc_id string, mention_id string, block_key string, offset int",
+    )
+    got = sorted(tuple(r) for r in blocking.lsh_candidate_join(m, d).collect())
+    assert got == [
+        ("d4", "d4#0", "", 0, "Q9", 0.5, 1),
+        ("d4", "d4#2", "angela merkle", 2, "Q1", 0.9, 1),
+    ]

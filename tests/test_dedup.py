@@ -68,32 +68,19 @@ def test_near_dup_clusters(spark):
     assert "c" not in flat and "e" not in flat
 
 
-def test_simhash_identical_docs_bucket(spark):
-    from refined_spark.operators.dedup import simhash_near_dups
-
-    d = _docs(spark, [("a", BASE), ("b", BASE), ("c", OTHER)])
-    groups = simhash_near_dups(d).collect()
-    assert len(groups) == 1 and groups[0].doc_ids == ["a", "b"]
-
-
 def test_simhash_matches_python_kernel(spark):
-    """The JVM single-pass plan is bit-exact with the pure-Python reference
-    kernel at BOTH widths (16-bit low-bits subset and the full signed
-    64-bit value, including the bit-63 sign handling)."""
+    """The Arrow kernel (simhash_table) is bit-exact with the pure-Python
+    reference kernel at BOTH widths (16-bit low-bits subset and the full
+    signed 64-bit value, including the bit-63 sign handling)."""
     from refined_spark.functions.hashing import simhash64_py
-    from refined_spark.operators.dedup import simhash_col
+    from refined_spark.operators.dedup import simhash_table
 
     rows = [("a", BASE), ("b", NEAR), ("c", OTHER),
             ("d", "Zz " * 40 + "qq")]  # repeated tokens: vote magnitudes > 1
     d = _docs(spark, rows)
-    got = {
-        r.doc_id: (r.h16, r.h64)
-        for r in d.select(
-            "doc_id",
-            simhash_col(F.col("text"), num_bits=16).alias("h16"),
-            simhash_col(F.col("text"), num_bits=64).alias("h64"),
-        ).collect()
-    }
+    h16 = {r.doc_id: r.simhash for r in simhash_table(d, num_bits=16).collect()}
+    h64 = {r.doc_id: r.simhash for r in simhash_table(d, num_bits=64).collect()}
+    got = {i: (h16[i], h64[i]) for i in h64}
     for doc_id, text in rows:
         toks = " ".join(text.lower().split()).split(" ")
         full = simhash64_py(toks)
@@ -106,22 +93,23 @@ def test_simhash_64bit_resolves_16bit_collisions(spark):
     collision-dominated: 100k distinct synthetic docs MUST collide
     (pigeonhole), turning 'same hash' into noise. The 64-bit default keeps
     every distinct doc distinct at the same corpus size — the reason
-    num_bits=64 is the default for simhash_near_dups/simhash_pairs."""
-    from refined_spark.operators.dedup import simhash_col
+    num_bits=64 is the default for simhash_table/simhash_pairs."""
+    from refined_spark.operators.dedup import simhash_table
 
     n = 100_000
     # deterministic diverse docs: 8 md5-derived pseudo-words per doc
     tok = lambda j: F.substring(F.md5(F.concat_ws("_", F.col("id").cast("string"), F.lit(str(j)))), 1, 10)
     d = spark.range(n).select(
-        F.concat_ws(" ", *[tok(j) for j in range(8)]).alias("text")
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", *[tok(j) for j in range(8)]).alias("text"),
     )
-    agg = d.select(
-        simhash_col(F.col("text"), num_bits=16).alias("h16"),
-        simhash_col(F.col("text"), num_bits=64).alias("h64"),
-    ).agg(
-        F.countDistinct("h16").alias("d16"),
-        F.countDistinct("h64").alias("d64"),
-    ).collect()[0]
+    h16 = simhash_table(d, num_bits=16).select(F.col("simhash").alias("h16"))
+    h64 = simhash_table(d, num_bits=64).select(F.col("simhash").alias("h64"))
+    agg = (
+        h16.agg(F.countDistinct("h16").alias("d16")).crossJoin(
+            h64.agg(F.countDistinct("h64").alias("d64"))
+        ).collect()[0]
+    )
     assert agg.d16 <= 1 << 16  # pigeonhole: massively collided
     assert agg.d16 < n
     assert agg.d64 == n  # 2^64 space: zero collisions among 10^5 docs
@@ -265,5 +253,5 @@ def test_keyed_pairs_evaluate_the_key_kernel_once(spark, op):
         df, out_col = simhash_pairs(d), "simhash#"
     plan = df._jdf.queryExecution().executedPlan().toString()
     kernels = [ln for ln in plan.splitlines()
-               if "MapInPandas" in ln and out_col in ln]
+               if ("MapInArrow" in ln or "MapInPandas" in ln) and out_col in ln]
     assert len(kernels) == 1, plan

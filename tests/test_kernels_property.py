@@ -13,17 +13,21 @@ properties below are the ones the distributed plans assume:
   - Jaro-Winkler range/boost bounds (scoring weights assume [0, 1]);
   - SimHash width-prefix consistency (BENCH.md's "hash values changed only
     in bits 16+" claim when the default moved 16 -> 64 bits) and vote
-    order-independence (dedup.simhash_col aggregates tokens in whatever
-    order the JVM scan yields);
+    order-independence (dedup.simhash_table and the DuckDB twin
+    queries._sql_simhash count each bit's votes over the token list);
+  - the MinHash batch kernel (hashing.minhash_batch, the one kernel dedup
+    and ER blocking share) equals its DuckDB reference minhash_sig_sql;
   - oracle cosine/F1 identities (the e2e gate divides by them).
 
-No SparkSession is used — the suite stays JVM-free and fast. Hypothesis
+No SparkSession is used — the suite stays JVM-free and fast (DuckDB
+evaluates the MinHash reference in-process). Hypothesis
 runs derandomized so CI never flakes on a lucky seed.
 """
 
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
-from refined_spark.functions.hashing import simhash64_py
+from refined_spark.functions.hashing import minhash_batch, simhash64_py
 from refined_spark.functions.normalize import normalize_surface_py
 from refined_spark.functions.similarity import (
     jaro_py,
@@ -155,6 +159,23 @@ def test_simhash_is_order_independent(tokens):
 def test_simhash_signed_64_range(tokens):
     h = simhash64_py(tokens, num_bits=64)
     assert -(1 << 63) <= h < (1 << 63)
+
+
+# ------------------------------------------------------------------ minhash
+# Spark strings are valid UTF-8, so no lone surrogates; nulls mix into the
+# batch like null text columns do
+minhash_texts = st.lists(
+    st.one_of(st.none(), st.text(
+        alphabet=st.characters(blacklist_categories=("Cs",)), max_size=24)),
+    max_size=12,
+)
+
+
+@SETTINGS
+@given(minhash_texts, st.integers(min_value=1, max_value=6))
+def test_minhash_batch_equals_sql_reference(minhash_sql, texts, k):
+    got = minhash_batch(pa.array(texts, pa.string()), k, 8).to_pylist()
+    assert got == minhash_sql(texts, k, 8)
 
 
 # ------------------------------------------------------------------- oracle

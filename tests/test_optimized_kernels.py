@@ -36,50 +36,50 @@ def _docs_str(spark):
     )
 
 
-def test_minhash_kernel_equals_jvm_expression(spark):
-    """The Arrow md5/permutation kernel must produce the exact longs of
-    the conv(substr(md5...)) expression tree it replaced."""
-    from refined_spark.functions.hashing import (
-        char_shingles_col,
-        minhash_base_col,
-        minhash_sig_from_base_col,
-    )
+def test_minhash_kernel_equals_sql_reference(spark, minhash_sql):
+    """The shared MinHash kernel (run through minhash_signatures) gives
+    the exact longs of minhash_sig_sql, the DuckDB reference, over the
+    shingles of Spark's normalized text: empty text, text shorter than k,
+    repeated shingles, multibyte UTF-8, null text, and a batch of nulls."""
     from refined_spark.operators.dedup import (
         minhash_signatures,
         normalized_text_col,
     )
 
-    d = _docs_int(spark)
-    got = {r.doc_id: r.sig for r in minhash_signatures(d, k=5, num_hashes=8).collect()}
-    base = d.select(
-        "doc_id",
-        minhash_base_col(
-            char_shingles_col(normalized_text_col(F.col("text")), 5)
-        ).alias("mh_base"),
-    )
-    want = {
-        r.doc_id: r.sig
-        for r in base.select(
-            "doc_id", minhash_sig_from_base_col(F.col("mh_base"), 8).alias("sig")
+    texts = TEXTS + ["abc", "zzzzzzzzzzzz", "Ĉé ﬁ 東京 ü 🙂 naïve café", None]
+    d = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    norm = sorted(
+        (r.doc_id, r.t)
+        for r in d.select(
+            "doc_id", normalized_text_col(F.col("text")).alias("t")
         ).collect()
-    }
-    assert got == want
+    )
+    want = dict(zip([i for i, _ in norm],
+                    minhash_sql([t for _, t in norm], 5, 8)))
+    got = {r.doc_id: r.sig for r in minhash_signatures(d, k=5, num_hashes=8).collect()}
+    assert got == want and want[len(texts) - 1] is None
+
+    nulls = spark.createDataFrame([(i, None) for i in range(3)],
+                                  "doc_id long, text string")
+    sigs = minhash_signatures(nulls, k=5, num_hashes=8).collect()
+    assert [r.sig for r in sigs] == [None] * 3
 
 
-def test_simhash_table_equals_simhash_col(spark):
-    from refined_spark.operators.dedup import simhash_col, simhash_table
+def test_minhash_rejects_more_than_128_hashes_when_planned(spark):
+    """num_hashes > 128 would overflow minhash_sig_sql's BIGINT i*h2; the
+    kernel refuses it while the plan is built, before any job runs."""
+    from refined_spark.operators.dedup import minhash_signatures
 
     d = _docs_int(spark)
-    for bits in (16, 64):
-        got = {r.doc_id: r.simhash
-               for r in simhash_table(d, num_bits=bits).collect()}
-        want = {
-            r.doc_id: r.sh
-            for r in d.select(
-                "doc_id", simhash_col(F.col("text"), num_bits=bits).alias("sh")
-            ).collect()
-        }
-        assert got == want, bits
+    sc = spark.sparkContext
+    sc.setJobGroup("minhash-129", "plan only")
+    try:
+        with pytest.raises(ValueError):
+            minhash_signatures(d, num_hashes=129)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("minhash-129") == []
+    minhash_signatures(d, num_hashes=128)  # the bound itself plans
 
 
 def _pairs_sharing_a_key(keys_by_doc):

@@ -86,8 +86,8 @@ def test_golden_clusters(spark, tables, fixture_paths):
 
 def test_golden_clusters_without_broadcast(spark, tables, fixture_paths):
     """The non-broadcast path (functions/joins.py policy): with
-    autoBroadcastJoinThreshold=-1 every maybe_broadcast join takes its
-    shuffle form — the 100x-scale physical plan. Winners must be identical
+    autoBroadcastJoinThreshold=-1 every join without an F.broadcast hint
+    takes its shuffle form — the 100x-scale physical plan. Winners must be identical
     to the oracle either way (join strategy must never change results)."""
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
